@@ -123,14 +123,6 @@ object IncrementalOps {
       ZSets.consolidate(touchedOld.unionByName(delta)))
   }
 
-  // ---------------------------------------------------------------- linear
-
-  /** Linear operators commute with differentiation: apply to deltas as-is
-    * (reference: filter_map.rs — weight passes through untouched).
-    */
-  def mapDelta(delta: DataFrame)(f: DataFrame => DataFrame): DataFrame =
-    f(delta)
-
   // ------------------------------------------------------------ aggregates
 
   /** Spec for one weighted linear aggregate: SUM(expr * weight) —

@@ -39,9 +39,7 @@ object Similarity {
     * element, per corpus row).
     */
   def quantize(a: Column, scale: Int): Column =
-    // SPARK_GRAFT_QUANT_HOF=1: A/B escape hatch back to the composed form
-    if (sys.env.contains("SPARK_GRAFT_QUANT_HOF")) quantizeHof(a, scale)
-    else org.apache.spark.sql.graft.Shims.column(
+    org.apache.spark.sql.graft.Shims.column(
       graft.functions.QuantizeRoundLong(
         org.apache.spark.sql.graft.Shims.expression(a), scale))
 

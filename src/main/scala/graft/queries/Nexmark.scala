@@ -350,15 +350,6 @@ object Nexmark {
       pipe
   }
 
-  // dev introspection for tools.Scratch phase timing (no graded use)
-  private[graft] def programSql: String = program
-  private[graft] def gradedViews: Seq[String] = defs.map(_.view)
-  private[graft] def genFrames(s: SparkSession)
-      : Map[String, org.apache.spark.sql.DataFrame] =
-    Seq("person", "auction", "bid").map(n =>
-      n -> s.sql(s"WITH ${genCtes(duck = false)} SELECT * FROM $n")
-        .localCheckpoint(true)).toMap
-
   /** Graded wrapper projections: timestamps emit as epoch millis
     * (cross-engine-stable), DECIMAL money as DOUBLE. The same wrapper
     * text runs over the engine view (adHoc) and the oracle CTE.

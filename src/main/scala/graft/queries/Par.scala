@@ -19,13 +19,9 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object Par {
 
-  /** Pool width for a session: cores/4 clamped to [2, 8].
-    * SPARK_GRAFT_PAR overrides for dev A/B runs (never set by the
-    * driver; absent = the formula).
-    */
+  /** Pool width for a session: cores/4 clamped to [2, 8]. */
   def width(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_PAR").map(_.toInt).getOrElse(
-      math.max(2, math.min(8, spark.sparkContext.defaultParallelism / 4)))
+    math.max(2, math.min(8, spark.sparkContext.defaultParallelism / 4))
 
   /** Map `f` over `items` on a bounded pool, preserving input order of
     * results; the first failure propagates (pool torn down either way).

@@ -723,8 +723,7 @@ object PgCorpus {
     val prevWs = spark.conf.get(wsKey, "true")
     val prevFm = spark.conf.get(fmKey, "FALLBACK")
     val prevAq = spark.conf.get(aqKey, "true")
-    spark.conf.set(spKey,
-      sys.env.getOrElse("SPARK_GRAFT_CORPUS_SP", "1"))
+    spark.conf.set(spKey, "1")
     // interpreted mode for the suite: hundreds of DISTINCT fixture-sized
     // plans thrash the 100-entry codegen cache and janino-compile inside
     // tasks (measured 12x task-time inflation under the concurrent
@@ -733,8 +732,7 @@ object PgCorpus {
     spark.conf.set(fmKey, "NO_CODEGEN")
     // AQE off at fixture size: one job per query instead of one per
     // shuffle stage (see StreamCorpus.runSuite)
-    spark.conf.set(aqKey,
-      sys.env.getOrElse("SPARK_GRAFT_CORPUS_AQE", "false"))
+    spark.conf.set(aqKey, "false")
     try {
       // tests are independent reads over the suite's fixture temp
       // views; each one's cost is driver-side analysis plus a tiny job,
@@ -829,8 +827,7 @@ object PgCorpus {
     val spKey = "spark.sql.shuffle.partitions"
     val prevSp = spark.conf.get(spKey)
     spark.conf.set(cpKey, "false")
-    spark.conf.set(spKey,
-      sys.env.getOrElse("SPARK_GRAFT_CORPUS_SP", "1"))
+    spark.conf.set(spKey, "1")
     try runSuiteIncremental0(spark, suite, cap)
     finally {
       spark.conf.set(cpKey, prevCp)
@@ -884,8 +881,7 @@ object PgCorpus {
       math.min(6, Par.width(spark))) { chunk =>
       val s = Par.childSession(spark,
         "spark.sql.constraintPropagation.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          sys.env.getOrElse("SPARK_GRAFT_CORPUS_SP", "1"),
+        "spark.sql.shuffle.partitions" -> "1",
         // interpreted-mode children: see StreamCorpus.runSuite — the
         // replay's distinct per-view plans otherwise janino-compile
         // inside tasks through a thrashed global codegen cache
@@ -893,8 +889,7 @@ object PgCorpus {
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
         // AQE off in fixture-sized children: one job per query instead
         // of one per shuffle stage (see StreamCorpus.runSuite)
-        "spark.sql.adaptive.enabled" ->
-          sys.env.getOrElse("SPARK_GRAFT_CORPUS_AQE", "false"))
+        "spark.sql.adaptive.enabled" -> "false")
       val used = localFrames.map(_._1).filter(n => chunk.exists(t =>
         ("(?i)\\b" + n + "\\b").r.findFirstIn(t.query).isDefined)).toSet
       val frames = localFrames.filter(f => used(f._1))

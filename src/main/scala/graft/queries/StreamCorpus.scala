@@ -231,8 +231,7 @@ object StreamCorpus {
       Par.width(spark)) { u =>
       val s = Par.childSession(spark,
         "spark.sql.constraintPropagation.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          sys.env.getOrElse("SPARK_GRAFT_CORPUS_SP", "1"),
+        "spark.sql.shuffle.partitions" -> "1",
         // fixture-sized plans: compiling hundreds of DISTINCT tiny
         // plans thrashes the global 100-entry codegen cache (janino
         // compile INSIDE tasks, under a shared lock — measured 7-12x
@@ -246,9 +245,7 @@ object StreamCorpus {
         // 1578 jobs were gate probes). Plan adaptivity has nothing to
         // decide on 4-partition fixture shuffles — same §1.2 regime
         // choice as interpreted mode, scoped to the child session.
-        // SPARK_GRAFT_CORPUS_AQE=true restores it for A/B (dev only).
-        "spark.sql.adaptive.enabled" ->
-          sys.env.getOrElse("SPARK_GRAFT_CORPUS_AQE", "false"))
+        "spark.sql.adaptive.enabled" -> "false")
       runUnit(s, u)
     }.flatten
     import spark.implicits._

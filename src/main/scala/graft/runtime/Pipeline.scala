@@ -528,16 +528,14 @@ final class Pipeline(spark: SparkSession,
     */
   private val recursiveNames: Set[String] = program.recursive.map(_.name).toSet
 
-  /** Bounded overlap for the per-step view loop: cores/4 clamped to
-    * [1, 8] (1 = the serial path — the driver's low-core scaling runs
-    * keep their old shape). `spark.graft.pipeline.viewParallelism`
-    * overrides for A/B and cluster sizing.
+  /** Bounded overlap for the per-step view loop and the table-delta
+    * integrate loop: `spark.graft.pipeline.viewParallelism`, default
+    * cores/4 clamped to [1, 8] (1 = the serial path).
     */
   private val viewPar: Int =
-    sys.env.get("SPARK_GRAFT_VIEWPAR").map(_.toInt).getOrElse(
-      spark.conf.getOption("spark.graft.pipeline.viewParallelism")
-        .map(_.toInt).getOrElse(math.max(1,
-          math.min(8, spark.sparkContext.defaultParallelism / 4))))
+    spark.conf.getOption("spark.graft.pipeline.viewParallelism")
+      .map(_.toInt).getOrElse(math.max(1,
+        math.min(8, spark.sparkContext.defaultParallelism / 4)))
 
   /** Views grouped into dependency levels: a view sits one level above
     * the deepest earlier view its SQL references (textual word match —
@@ -1376,7 +1374,6 @@ final class Pipeline(spark: SparkSession,
       cols: Seq[(String, String)], prefix: String,
       latePred: Option[org.apache.spark.sql.Column]):
       Option[org.apache.spark.sql.Row] = {
-    if (sys.env.get("SPARK_GRAFT_LOCAL_PROBE").contains("0")) return None
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     def isLocal(df: DataFrame) =
       df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
@@ -1708,7 +1705,7 @@ final class Pipeline(spark: SparkSession,
     // (crates: upsert handling in the input controller; SURVEY §2.1).
     // phase-tagged job descriptions: every Spark job fired by a step
     // phase carries "step#N <phase>" so the per-step driver floor is
-    // attributable per phase/view in the UI and JobMeter traces
+    // attributable per phase/view in the UI and `perfbench --trace`
     def tag(phase: String): Unit =
       spark.sparkContext.setJobDescription(s"step#$stepsRun $phase")
     val relDeltas =
@@ -1719,7 +1716,7 @@ final class Pipeline(spark: SparkSession,
     // materializations overlap instead of paying the per-job driver
     // floor serially (guide §2.6). viewPar=1 keeps it serial.
     graft.queries.Par.map(deltas.toSeq,
-      math.min(Pipeline.intPar.getOrElse(viewPar), deltas.size)) {
+      math.min(viewPar, deltas.size)) {
       case (name, raw0) =>
       tag(s"integrate $name")
       // freeze verdicts are judged against the waterline the
@@ -1885,7 +1882,6 @@ final class Pipeline(spark: SparkSession,
             oldSelf)
         case Ivm.GroupAgg(rel, groupCols, outCols, _)
             if relDeltas.contains(rel) && groupCols.nonEmpty &&
-              Pipeline.linearAggEnabled &&
               linearAggInfo(v.name, v.sql).isDefined =>
           // all-SUM/COUNT view: partial-sum state, delta-only aggregation
           evalLinearAgg(v.name, v.sql, rel, outCols, relDeltas,
@@ -2051,7 +2047,7 @@ final class Pipeline(spark: SparkSession,
     // each member's body is analyzed ONCE per step (against the canonical
     // temp views); every seed term and every fixpoint round then GRAFTS
     // its bindings onto the cached branch plans by object-identity leaf
-    // replacement (bindLeaves). Re-registering temp views and re-analyzing
+    // replacement (graftPlan). Re-registering temp views and re-analyzing
     // inside the round closure was the dominant driver-side cost of deep
     // recursions (ADVICE r3: analysis cost scaled rounds × members ×
     // branches).
@@ -2074,7 +2070,8 @@ final class Pipeline(spark: SparkSession,
     def branch(m: String, bi: Int, outCols: Seq[String],
         binds: Map[String, DataFrame]): DataFrame = {
       val (b, slots) = analyzed(m)(bi)
-      bindLeaves(b, slots, binds).toDF(outCols: _*)
+      org.apache.spark.sql.graft.Shims.ofRows(spark,
+        graftPlan(b, slots, binds)).toDF(outCols: _*)
     }
     val oldTotals = group.map(m => m.name -> multisetOf(m.name, oldViews)).toMap
     val outCols = group.map(m => m.name -> emptyViews(m.name).columns.toSeq).toMap
@@ -2143,37 +2140,6 @@ final class Pipeline(spark: SparkSession,
       ZSets.lift(cont.newRows(m.name)).localCheckpoint(true)).toMap
     cont.release()
     out
-  }
-
-  /** Replace each identified relation leaf of `plan` (object-identity
-    * keyed) with its binding DataFrame's plan, aliased exprId-preservingly
-    * onto the leaf's output so every upstream reference stays valid — the
-    * same graft evalSemiAnti/evalAggOverMulti use, generalized to N leaves
-    * in one bottom-up transform. Lets delta rules evaluate a pre-analyzed
-    * plan under fresh bindings without re-registering temp views or
-    * re-analyzing the SQL.
-    */
-  private def bindLeaves(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      leaves: Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      binds: Map[String, DataFrame]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-    val repl = new java.util.IdentityHashMap[LogicalPlan, LogicalPlan]()
-    leaves.foreach { case (rel, node) =>
-      val rplan = binds(rel).queryExecution.analyzed
-      require(rplan.output.size == node.output.size,
-        s"binding arity drifted for $rel")
-      val aliases = node.output.zip(rplan.output).map { case (orig, cur) =>
-        require(cur.dataType == orig.dataType,
-          s"binding type drifted for $rel: $cur vs $orig")
-        Alias(cur, orig.name)(exprId = orig.exprId)
-      }
-      repl.put(node, Project(aliases, rplan))
-    }
-    org.apache.spark.sql.graft.Shims.ofRows(spark, plan.transformUp {
-      case p if repl.containsKey(p) => repl.get(p)
-    })
   }
 
   /** Linear: Q(Δ) directly — bind every referenced relation to its delta
@@ -2652,7 +2618,7 @@ final class Pipeline(spark: SparkSession,
       oldStates: collection.Map[String, DataFrame]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
     val shims = org.apache.spark.sql.graft.Shims
 
     // ONE analysis per VIEW for the whole pipeline lifetime (was one per
@@ -2676,23 +2642,6 @@ final class Pipeline(spark: SparkSession,
           Ivm.leafNodes(sp.join.right, leaf), ik)
       })
     val names = sp0.rightKeys.indices.map(i => s"_k$i")
-
-    def leafRepl(leaves: Seq[(String, LogicalPlan)],
-        binds: Map[String, DataFrame]): java.util.IdentityHashMap[LogicalPlan, LogicalPlan] = {
-      val repl = new java.util.IdentityHashMap[LogicalPlan, LogicalPlan]()
-      leaves.foreach { case (rel, node) =>
-        val rplan = binds(rel).queryExecution.analyzed
-        require(rplan.output.size == node.output.size,
-          s"binding arity drifted for $rel in $viewName")
-        val aliases = node.output.zip(rplan.output).map { case (orig, cur) =>
-          require(cur.dataType == orig.dataType,
-            s"binding type drifted for $rel in $viewName: $cur vs $orig")
-          Alias(cur, orig.name)(exprId = orig.exprId)
-        }
-        repl.put(node, Project(aliases, rplan))
-      }
-      repl
-    }
 
     // delta bindings for one side: changed rels → signed delta multiset,
     // unchanged rels → empty (the linear delta rule on that subtree)
@@ -2721,10 +2670,8 @@ final class Pipeline(spark: SparkSession,
             Alias(a, s"_k$i")()
           }
           def keyTerm(sign: DataFrame => DataFrame): DataFrame = {
-            val repl = leafRepl(rightLeaves, deltaPart(rightRels, sign))
-            shims.ofRows(spark, Project(proj, sp0.join.right).transformUp {
-              case p if repl.containsKey(p) => repl.get(p)
-            })
+            shims.ofRows(spark, graftPlan(Project(proj, sp0.join.right),
+              rightLeaves, deltaPart(rightRels, sign)))
           }
           val kTerms =
             (if (rPos) Seq(ZSets.lift(keyTerm(identity))) else Nil) ++
@@ -2761,7 +2708,7 @@ final class Pipeline(spark: SparkSession,
           s"indicator type drifted for $viewName: $cur vs $orig")
         Alias(cur, orig.name)(exprId = orig.exprId)
       }
-      val repl = leafRepl(leftLeaves, leftBinds)
+      val repl = leafReplMap(leftLeaves, leftBinds)
       shims.ofRows(spark, plan0.transformUp {
         case p if repl.containsKey(p) => repl.get(p)
         case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
@@ -2782,12 +2729,9 @@ final class Pipeline(spark: SparkSession,
       if (!leftRels.exists(relDeltas.contains)) Nil
       else signs.map { case (sign, negOut) =>
         val binds = deltaPart(leftRels, sign)
-        val probeRepl = leafRepl(leftLeaves, binds)
-        val probe = shims.ofRows(spark, Project(
+        val probe = shims.ofRows(spark, graftPlan(Project(
           sp0.leftKeys.zipWithIndex.map { case (a, i) => Alias(a, s"_k$i")() },
-          sp0.join.left).transformUp {
-            case p if probeRepl.containsKey(p) => probeRepl.get(p)
-          })
+          sp0.join.left), leftLeaves, binds))
         val present = indicatorState.get(indKey)
           .map(st => st.filter(col(ZSets.W) > 0).drop(ZSets.W))
           .getOrElse(spark.createDataFrame(
@@ -3070,20 +3014,6 @@ object Pipeline {
   private[runtime] object Memo {
     def of[T](v: T): Memo[T] = new Memo(() => v)
   }
-
-  /** Integrate-loop pool width override (A/B escape hatch):
-    * SPARK_GRAFT_INTPAR=1 keeps per-table delta integration serial;
-    * absent = the view-loop width.
-    */
-  private[runtime] val intPar: Option[Int] =
-    sys.env.get("SPARK_GRAFT_INTPAR").map(_.toInt)
-
-  /** Kill switch for the linear-aggregate fast path (A/B perf work and
-    * an escape hatch): SPARK_GRAFT_LINEAR_AGG=0 reverts GroupAgg views
-    * to touched-group re-aggregation.
-    */
-  private[runtime] val linearAggEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_LINEAR_AGG", "1") != "0"
 
   /** `INSERT INTO <table> <VALUES …|SELECT …>` (ad-hoc surface). */
   private[runtime] val InsertRe =

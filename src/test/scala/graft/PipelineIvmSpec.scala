@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.incremental.Ivm
@@ -50,29 +51,69 @@ class PipelineIvmSpec extends SparkSpec {
   }
 
   test("incremental maintenance equals batch recompute for every shape") {
-    val pipe = Pipeline(spark, programSql)
     val o = orders(500).localCheckpoint(true)
     val c = customers(60).localCheckpoint(true)
     // step 1: inserts; step 2: mixed insert+retract touching both tables
-    pipe.step(Map(
-      "orders" -> ZSets.lift(o.filter(col("o_id") % 3 =!= 0)),
-      "customer" -> ZSets.lift(c.filter(col("c_id") < 50))))
-    pipe.step(Map(
-      "orders" -> ZSets.lift(o.filter(col("o_id") % 3 === 0))
-        .unionByName(ZSets.negate(ZSets.lift(o.filter(col("o_id") % 7 === 0)))),
-      "customer" -> ZSets.lift(c.filter(col("c_id") >= 50))
-        .unionByName(ZSets.negate(ZSets.lift(c.filter(col("c_id") % 11 === 3))))))
+    val steps = Seq(
+      Map(
+        "orders" -> ZSets.lift(o.filter(col("o_id") % 3 =!= 0)),
+        "customer" -> ZSets.lift(c.filter(col("c_id") < 50))),
+      Map(
+        "orders" -> ZSets.lift(o.filter(col("o_id") % 3 === 0))
+          .unionByName(ZSets.negate(ZSets.lift(o.filter(col("o_id") % 7 === 0)))),
+        "customer" -> ZSets.lift(c.filter(col("c_id") >= 50))
+          .unionByName(ZSets.negate(ZSets.lift(c.filter(col("c_id") % 11 === 3))))))
+    def run(s: SparkSession): (Pipeline, Seq[Map[String, DataFrame]]) = {
+      val pipe = Pipeline(s, programSql)
+      (pipe, steps.map(pipe.step))
+    }
+    // local[4] resolves viewParallelism to 1: the serial step loop
+    val (serial, serialOut) = run(spark)
+    // the concurrent step loop (integrate pool, per-level view fan-out,
+    // warm-shared phase) on a session of its own: levels are
+    // {big, dnames} and {joined, amt_by_cust, opaque_topk}
+    val parSession = spark.newSession()
+    parSession.conf.set("spark.graft.pipeline.viewParallelism", "8")
+    val warmJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.matches("step#\\d+ warm-shared")))
+          warmJobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (parallel, parallelOut) =
+      try {
+        val r = run(parSession)
+        org.apache.spark.graft.TestShims.drainListenerBus(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(warmJobs.get > 0, "the parallel step loop never ran warm-shared")
+
+    def sameMultiset(a: DataFrame, b: DataFrame): Boolean = {
+      val (ca, cb) = (ZSets.consolidate(a), ZSets.consolidate(b))
+      val cbo = cb.select(ca.columns.map(col): _*)
+      ca.exceptAll(cbo).isEmpty && cbo.exceptAll(ca).isEmpty
+    }
+    serialOut.zip(parallelOut).zipWithIndex.foreach { case ((sd, pd), i) =>
+      assert(pd.keySet === sd.keySet)
+      for ((v, d) <- sd)
+        assert(sameMultiset(d, pd(v)),
+          s"step ${i + 1}: parallel delta of $v diverged from serial")
+    }
 
     val batch = Pipeline(spark, programSql).runBatch(Map(
       "orders" -> o.filter(col("o_id") % 3 =!= 0 || col("o_id") % 3 === 0)
         .filter(col("o_id") % 7 =!= 0),
       "customer" -> c.filter(col("c_id") % 11 =!= 3)))
 
-    for (v <- Seq("big", "joined", "amt_by_cust", "dnames")) {
+    for ((name, pipe) <- Seq("serial" -> serial, "parallel" -> parallel);
+         v <- Seq("big", "joined", "amt_by_cust", "dnames")) {
       val inc = pipe.adHoc(s"SELECT * FROM $v")
       val exp = batch(v)
       assert(inc.exceptAll(exp).isEmpty && exp.exceptAll(inc).isEmpty,
-        s"view $v diverged from batch recompute")
+        s"$name view $v diverged from batch recompute")
     }
   }
 
