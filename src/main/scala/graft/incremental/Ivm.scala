@@ -37,7 +37,10 @@ import org.apache.spark.sql.catalyst.plans.logical._
   */
 object Ivm {
 
-  sealed trait Shape
+  sealed trait Shape {
+    /** Every relation the view reads (none for Opaque). */
+    def relations: Iterable[String]
+  }
   /** Relations referenced (each may appear any number of times). */
   final case class Linear(relations: Set[String]) extends Shape
   /** Relations in first-appearance order, each exactly once. */
@@ -54,7 +57,9 @@ object Ivm {
         * then use the chain fast path (state = the view output itself,
         * least/greatest merge) instead of touched-group re-aggregation.
         */
-      chainCols: Seq[(String, Boolean)] = Nil) extends Shape
+      chainCols: Seq[(String, Boolean)] = Nil) extends Shape {
+    def relations: Set[String] = Set(relation)
+  }
   /** Aggregate directly over a multilinear join body — the composite the
     * reference compiles as two circuit nodes. The runner maintains a
     * hidden Z-set for the join (by the multilinear rule) and re-aggregates
@@ -78,9 +83,13 @@ object Ivm {
     * match transitions.
     */
   final case class SemiAnti(leftRels: Set[String], rightRels: Set[String],
-      isAnti: Boolean) extends Shape
+      isAnti: Boolean) extends Shape {
+    def relations: Set[String] = leftRels ++ rightRels
+  }
 
-  case object Opaque extends Shape
+  case object Opaque extends Shape {
+    def relations: Set[String] = Set.empty
+  }
 
   /** The semi/anti Join node plus the paired condition key attributes
     * (left-side and right-side, conjunct order, deduped on the right

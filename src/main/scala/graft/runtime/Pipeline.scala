@@ -5,6 +5,7 @@ import java.util.Locale
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.StructType
@@ -81,18 +82,6 @@ final class Pipeline(spark: SparkSession,
     */
   private val relTraces =
     scala.collection.concurrent.TrieMap[String, graft.incremental.TieredTrace]()
-
-  /** Integrate `delta` into a trace-backed relation's state and return
-    * the post-append consolidated read (lazy; pinned to this step's
-    * runs, so a later append never changes what this frame reads).
-    */
-  private def traceIntegrate(name: String, delta: DataFrame): DataFrame = {
-    val tr = relTraces.getOrElseUpdate(name,
-      new graft.incremental.TieredTrace(delta.limit(0),
-        ZSets.dataCols(delta), memRows = traceMemRows))
-    tr.append(delta)
-    tr.read()
-  }
 
   /** Release trace-backed state storage (memtable caches + any spilled
     * runs). The pipeline remains usable; state restarts empty.
@@ -286,46 +275,68 @@ final class Pipeline(spark: SparkSession,
     */
   private val indicatorState =
     scala.collection.concurrent.TrieMap[String, DataFrame]()
-  /** Cached per-view analyzed plans for the SemiAnti delta rule: (plan0,
-    * semi parts, left leaves, right leaves, indicator identity). Safe to
-    * reuse across steps — every evaluation replaces ALL leaf bindings
-    * before running.
+
+  /** Integrate a consolidated delta into relation `name`'s state in
+    * `states` and return the new state. A `traced` relation appends the
+    * delta to its LSM-tiered trace as a run — O(|Δ|) — and reads back
+    * the consolidated state, lazy and pinned to this step's runs, so a
+    * later append never changes what the returned frame reads. Any other
+    * state merges the delta into the previous snapshot (touching only
+    * delta keys), materialized once.
+    */
+  private def integrate(
+      states: scala.collection.concurrent.TrieMap[String, DataFrame],
+      name: String, delta: DataFrame, traced: Boolean = false): DataFrame = {
+    val next =
+      if (traced) {
+        val tr = relTraces.getOrElseUpdate(name,
+          new graft.incremental.TieredTrace(delta.limit(0),
+            ZSets.dataCols(delta), memRows = traceMemRows))
+        tr.append(delta)
+        tr.read()
+      } else states.get(name)
+        .fold(delta)(IncrementalOps.mergeDelta(_, delta))
+        .localCheckpoint(false)
+    states(name) = next
+    next
+  }
+
+  /** Per-view parts of the SemiAnti delta rule, derived once from the
+    * view's cached analysis ([[analyzedLeaves]]) with its predicate
+    * subqueries rewritten to joins, as [[Ivm.classify]] does: (rewritten
+    * plan, semi parts, left leaves, right leaves, indicator identity).
+    * Safe to reuse across steps — every evaluation replaces ALL leaf
+    * bindings before running.
     */
   private val semiAntiCache = scala.collection.concurrent.TrieMap[String,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Ivm.SemiParts,
-      Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      String)]()
+    (LogicalPlan, Ivm.SemiParts, Seq[(String, LogicalPlan)],
+      Seq[(String, LogicalPlan)], String)]()
 
-  /** Analyzed-plan cache for the leaf-grafting delta rules (multilinear
-    * and agg-over-join): ONE Catalyst analysis per view for the pipeline
-    * lifetime, mirroring [[semiAntiCache]] — the per-term/per-step
-    * re-parse + re-analysis of the view SQL was a measurable slice of
-    * the step's driver floor. Every evaluation replaces ALL identified
-    * relation leaves before running, so the cached analysis can never
-    * evaluate a stale binding.
+  /** Analyzed-plan cache for the delta rules: ONE Catalyst analysis per
+    * view for the pipeline lifetime — the per-term/per-step re-parse +
+    * re-analysis of the view SQL was a measurable slice of the step's
+    * driver floor. Every evaluation replaces ALL identified relation
+    * leaves before running, so the cached analysis can never evaluate a
+    * stale binding.
     */
-  private val leafPlanCache = scala.collection.concurrent.TrieMap[String,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)])]()
+  private val leafPlanCache =
+    scala.collection.concurrent.TrieMap[String, Pipeline.Analyzed]()
 
   private def analyzedLeaves(viewName: String, sql: String)
-      : (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]) =
+      : Pipeline.Analyzed =
     leafPlanCache.getOrElseUpdate(viewName, computeAnalyzedLeaves(sql))
 
   /** One parse+analysis of a view body plus its identified relation
     * leaves — the uncached form (NOW()-bound bodies change every step).
     */
-  private def computeAnalyzedLeaves(sql: String)
-      : (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]) =
+  private def computeAnalyzedLeaves(sql: String): Pipeline.Analyzed =
     evalLock.synchronized {
       // same division semantics as sqlView — IVM deltas must match batch
       val plan = org.apache.spark.sql.graft.IntegerDivision
         .transformPlan(spark.sql(sql).queryExecution.analyzed)
       val known = (tableNames ++ program.views.map(_.name)).toSet
-      (plan, Ivm.leafNodes(plan, Ivm.leafFn(spark, known)))
+      val leaf = Ivm.leafFn(spark, known)
+      Pipeline.Analyzed(plan, Ivm.leafNodes(plan, leaf), leaf)
     }
 
   /** Whether an Opaque view body can be delta-evaluated by grafting
@@ -338,11 +349,11 @@ final class Pipeline(spark: SparkSession,
     * re-analysis path, same collision rule as [[Ivm.leafFn]]).
     */
   private def graftableOpaque(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      leaves: Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)])
+      plan: LogicalPlan,
+      leaves: Seq[(String, LogicalPlan)])
       : Boolean = {
     import org.apache.spark.sql.catalyst.expressions.PlanExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+    import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
     val hasSubq = plan.exists(p =>
       p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
     if (hasSubq) return false
@@ -370,31 +381,35 @@ final class Pipeline(spark: SparkSession,
     check(plan)
   }
 
-  /** Replacement map: each identified relation leaf → its binding's
-    * analyzed plan, aliased onto the leaf's exprIds (identity-keyed so
-    * repeated relations each rebind).
+  /** `df`'s analyzed plan with its columns aliased onto `attrs` (names
+    * and exprIds), so a cached plan that reads `attrs` reads `df`
+    * instead. Fails when `what`'s arity or column types drifted from the
+    * cached analysis.
     */
-  private def leafReplMap(
-      leaves: Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      binds: Map[String, DataFrame])
-      : java.util.IdentityHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+  private def rebind(
+      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      df: DataFrame, what: String): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    val repl = new java.util.IdentityHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    val rplan = df.queryExecution.analyzed
+    require(rplan.output.size == attrs.size, s"$what arity drifted")
+    Project(attrs.zip(rplan.output).map { case (orig, cur) =>
+      require(cur.dataType == orig.dataType,
+        s"$what type drifted: $cur vs $orig")
+      Alias(cur, orig.name)(exprId = orig.exprId)
+    }, rplan)
+  }
+
+  /** Replacement map: each identified relation leaf → its binding,
+    * rebound onto the leaf's exprIds (identity-keyed so repeated
+    * relations each rebind).
+    */
+  private def leafReplMap(leaves: Seq[(String, LogicalPlan)],
+      binds: Map[String, DataFrame])
+      : java.util.IdentityHashMap[LogicalPlan, LogicalPlan] = {
+    val repl = new java.util.IdentityHashMap[LogicalPlan, LogicalPlan]()
     leaves.foreach { case (rel, node) =>
-      val rplan = binds(rel).queryExecution.analyzed
-      require(rplan.output.size == node.output.size,
-        s"binding arity drifted for $rel")
-      val aliases = node.output.zip(rplan.output).map { case (orig, cur) =>
-        require(cur.dataType == orig.dataType,
-          s"binding type drifted for $rel: $cur vs $orig")
-        Alias(cur, orig.name)(exprId = orig.exprId)
-      }
-      repl.put(node, Project(aliases, rplan))
+      repl.put(node, rebind(node.output, binds(rel), s"binding for $rel"))
     }
     repl
   }
@@ -407,7 +422,7 @@ final class Pipeline(spark: SparkSession,
     * applies the session's implicit coercions exactly as batch would.
     */
   private def bindsConform(
-      leaves: Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
+      leaves: Seq[(String, LogicalPlan)],
       binds: Map[String, DataFrame]): Boolean =
     leaves.forall { case (rel, node) =>
       binds.get(rel).exists { df =>
@@ -424,12 +439,25 @@ final class Pipeline(spark: SparkSession,
 
   /** Graft bindings onto a cached analyzed plan (all leaves replaced). */
   private def graftPlan(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      leaves: Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
+      plan: LogicalPlan,
+      leaves: Seq[(String, LogicalPlan)],
       binds: Map[String, DataFrame])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+      : LogicalPlan = {
     val repl = leafReplMap(leaves, binds)
     plan.transformUp { case p if repl.containsKey(p) => repl.get(p) }
+  }
+
+  /** Evaluate a view body under `binds`: graft them onto the cached
+    * analysis `a` when every leaf binding conforms ([[bindsConform]]),
+    * else re-analyze the SQL against rebound temp views ([[evalWith]]),
+    * which applies the session's implicit coercions exactly as batch
+    * would. Without a graft-safe analysis (`None`) it always re-analyzes.
+    */
+  private def evalBound(sql: String, a: Option[Pipeline.Analyzed],
+      binds: Map[String, DataFrame]): DataFrame = a match {
+    case Some(an) if bindsConform(an.leaves, binds) =>
+      Shims.ofRows(spark, graftPlan(an.plan, an.leaves, binds))
+    case _ => evalWith(sql, binds)
   }
 
   /** Per-step memo of each delta's weight signs (hasPositive,
@@ -441,13 +469,16 @@ final class Pipeline(spark: SparkSession,
   private val stepDeltaSigns =
     scala.collection.concurrent.TrieMap[String, Pipeline.Memo[(Boolean, Boolean)]]()
 
-  private def signsOf(name: String,
+  /** (any positive weight, any negative weight) over the deltas of
+    * `rels`; a relation without a delta has neither.
+    */
+  private def signsOf(rels: Iterable[String],
       relDeltas: collection.Map[String, DataFrame]): (Boolean, Boolean) = {
     // per-key memo cell, NOT a map-wide lock: the lazy probe runs a
     // Spark job, and holding the map monitor across it convoyed every
     // concurrent view needing any sign (r15 verdict). Only same-name
     // probes serialize (on the cell's lazy init).
-    def compute(): (Boolean, Boolean) = relDeltas.get(name) match {
+    def compute(name: String): (Boolean, Boolean) = relDeltas.get(name) match {
       case None => (false, false)
       case Some(d) =>
         // lazy fallback (view deltas discovered mid-loop); table deltas
@@ -458,22 +489,48 @@ final class Pipeline(spark: SparkSession,
         (!r.isNullAt(0) && r.getLong(0) > 0,
           !r.isNullAt(1) && r.getLong(1) < 0)
     }
-    stepDeltaSigns.get(name) match {
-      case Some(m) => m.value
-      case None =>
-        val m = new Pipeline.Memo(() => compute())
-        stepDeltaSigns.putIfAbsent(name, m).getOrElse(m).value
-    }
+    def one(name: String): (Boolean, Boolean) =
+      stepDeltaSigns.get(name) match {
+        case Some(m) => m.value
+        case None =>
+          val m = new Pipeline.Memo(() => compute(name))
+          stepDeltaSigns.putIfAbsent(name, m).getOrElse(m).value
+      }
+    rels.toSeq.map(one)
+      .foldLeft((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
   }
+
+  /** The ± terms of a delta rule, built only for the signs present in
+    * this step's deltas: `term(sign)` evaluates the rule over the deltas
+    * mapped through `sign` — identity for the positive part, negation
+    * for the negative part, whose result is negated back. `lift` gives a
+    * term's rows their signed form (Z-set weights by default) and
+    * `negate` flips that form.
+    */
+  private def signedTerms(signs: (Boolean, Boolean),
+      lift: DataFrame => DataFrame = ZSets.lift,
+      negate: DataFrame => DataFrame = ZSets.negate)(
+      term: (DataFrame => DataFrame) => DataFrame): Seq[DataFrame] =
+    (if (signs._1) Seq(lift(term(identity))) else Nil) ++
+      (if (signs._2) Seq(negate(lift(term(ZSets.negate)))) else Nil)
+
+  /** Bindings of the linear delta rule: each of `rels` bound to its
+    * `sign`-mapped delta multiset, a relation without a delta to empty.
+    */
+  private def deltaBinds(rels: Iterable[String],
+      relDeltas: collection.Map[String, DataFrame],
+      sign: DataFrame => DataFrame): Map[String, DataFrame] =
+    rels.map(r => r -> relDeltas.get(r)
+      .map(d => ZSets.toMultiset(sign(d)))
+      .getOrElse(emptyOf(r))).toMap
 
   /** Relations whose deltas feed a sign-consulting delta rule
     * (multilinear / agg-over-join / semi-anti terms evaluate only the
     * sign parts actually present).
     */
   private lazy val signRels: Set[String] = shapes.values.flatMap {
-    case Ivm.Multilinear(rels) => rels
-    case Ivm.AggOverMulti(rels, _, _) => rels
-    case Ivm.SemiAnti(l, r, _) => (l ++ r).toSeq
+    case s @ (_: Ivm.Multilinear | _: Ivm.AggOverMulti | _: Ivm.SemiAnti) =>
+      s.relations
     case _ => Nil
   }.toSet
 
@@ -537,43 +594,60 @@ final class Pipeline(spark: SparkSession,
       .map(_.toInt).getOrElse(math.max(1,
         math.min(8, spark.sparkContext.defaultParallelism / 4)))
 
+  /** Relation names a view body reads: every relation reference of its
+    * parsed plan, including those inside subquery expressions and CTE
+    * definitions (a CTE name read in the body counts too, which can only
+    * over-approximate). Parsing resolves nothing, so no view needs to be
+    * registered yet; a name inside a string literal or a comment is not
+    * a reference.
+    */
+  private def referencedRelations(sql: String): Set[String] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    def refs(p: LogicalPlan): Seq[String] = (p match {
+      case r: UnresolvedRelation =>
+        Seq(r.multipartIdentifier.last.toLowerCase(Locale.ROOT))
+      case _ => Nil
+    }) ++ (p.children ++ p.subqueries ++
+      p.innerChildren.collect { case c: LogicalPlan => c }).flatMap(refs)
+    refs(spark.sessionState.sqlParser.parsePlan(sql)).toSet
+  }
+
+  /** view → the program relations (tables and views) it reads directly. */
+  private lazy val viewDeps: Map[String, Set[String]] = {
+    val names = (tableNames ++ program.views.map(_.name)).toSet
+    program.views.map(v =>
+      v.name -> referencedRelations(v.sql).intersect(names)).toMap
+  }
+
   /** Views grouped into dependency levels: a view sits one level above
-    * the deepest earlier view its SQL references (textual word match —
-    * over-approximation only costs parallelism, same rule as
-    * [[emitFinalDeps]]). Views in one level never read each other's
-    * step output, so [[step]] may evaluate a level concurrently.
-    * Declaration order is preserved inside each level.
+    * the deepest earlier view it reads ([[viewDeps]]). Views in one
+    * level never read each other's step output, so [[step]] may evaluate
+    * a level concurrently. Declaration order is preserved inside each
+    * level.
     */
   private lazy val viewLevels: Seq[Seq[graft.ddl.Ddl.ViewDef]] = {
     val level = mutable.Map[String, Int]()
-    val earlier = mutable.ListBuffer[graft.ddl.Ddl.ViewDef]()
     program.views.foreach { v =>
-      val deps = earlier.filter(w =>
-        ("(?i)\\b" + java.util.regex.Pattern.quote(w.name) + "\\b").r
-          .findFirstIn(v.sql).isDefined)
-      level(v.name) =
-        if (deps.isEmpty) 0 else deps.map(w => level(w.name)).max + 1
-      earlier += v
+      level(v.name) = viewDeps(v.name).flatMap(level.get)
+        .maxOption.fold(0)(_ + 1)
     }
     program.views.groupBy(v => level(v.name)).toSeq.sortBy(_._1).map(_._2)
   }
 
-  /** Per level: relation names (tables or earlier views) textually
-    * referenced by TWO OR MORE of the level's views. Before a level fans
-    * out, the current frames of these names are warmed
-    * ([[Shims.warmCheckpoint]]) so concurrent first consumers don't race
-    * to materialize one shared lazy checkpoint — the r15 round shipped a
-    * duplicate-first-touch task inflation exactly here (nexmark_q0
-    * taskRun 255→469 s under viewPar=8). A name referenced once is left
-    * to its single consumer (same cost, no race, no extra job).
+  /** Per level: relation names (tables or earlier views) read by TWO OR
+    * MORE of the level's views. Before a level fans out, the current
+    * frames of these names are warmed ([[Shims.warmCheckpoint]]) so
+    * concurrent first consumers don't race to materialize one shared
+    * lazy checkpoint — the r15 round shipped a duplicate-first-touch task
+    * inflation exactly here (nexmark_q0 taskRun 255→469 s under
+    * viewPar=8). A name read once is left to its single consumer (same
+    * cost, no race, no extra job).
     */
   private lazy val levelSharedDeps: Seq[Seq[String]] = {
     val names = tableNames ++ program.views.map(_.name)
-    val refs = names.map(n => n ->
-      ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r).toMap
     viewLevels.map { level =>
-      names.filter(n => level.count(v => v.name != n &&
-        refs(n).findFirstIn(v.sql).isDefined) >= 2).sorted
+      names.filter(n =>
+        level.count(v => v.name != n && viewDeps(v.name)(n)) >= 2).sorted
     }
   }
 
@@ -715,28 +789,17 @@ final class Pipeline(spark: SparkSession,
     program.views.flatMap(v =>
       v.properties.get("emit_final").map(v.name -> _.toLowerCase)).toMap
 
-  /** Transitive input TABLES of each emit_final view (textual closure
-    * through other views — fixture programs join through local views).
+  /** Transitive input TABLES of each emit_final view ([[viewDeps]]
+    * closed through other views — fixture programs join through local
+    * views).
     */
   private lazy val emitFinalDeps: Map[String, Set[String]] = {
-    def refs(sql: String, names: Seq[String]): Set[String] =
-      names.filter(n =>
-        ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r
-          .findFirstIn(sql).isDefined).toSet
-    val viewSql = program.views.map(v => v.name -> v.sql).toMap
-    emitFinalCol.keys.map { vn =>
-      val seen = mutable.Set[String]()
-      val tables = mutable.Set[String]()
-      def walk(sql: String): Unit = {
-        tables ++= refs(sql, tableNames)
-        refs(sql, program.views.map(_.name))
-          .filterNot(seen).foreach { w =>
-            seen += w; viewSql.get(w).foreach(walk)
-          }
-      }
-      walk(viewSql(vn))
-      vn -> tables.toSet
-    }.toMap
+    def closure(seen: Set[String]): Set[String] = {
+      val next = seen ++ seen.flatMap(viewDeps.getOrElse(_, Set.empty))
+      if (next == seen) seen else closure(next)
+    }
+    emitFinalCol.keys.map(vn =>
+      vn -> closure(Set(vn)).intersect(tableNames.toSet)).toMap
   }
 
   /** view → (input waterline value ⇒ emit-column bound): the emit
@@ -925,21 +988,15 @@ final class Pipeline(spark: SparkSession,
       .filter(tableState.contains)
       .toSet
 
-    // stability: unchanged SQL and every transitively-referenced input
-    // carried/stable — computed on the NEW program's bindings (the
-    // constructor registered them), declaration order resolves deps
+    // stability: unchanged SQL and every transitively-read input
+    // carried/stable — the NEW program's view dependencies, resolved in
+    // declaration order
     val oldViewSql = program.views.map(v => v.name -> v.sql).toMap
-    val known = (newProg.tables.map(_.name)
-      ++ newProg.views.map(_.name)).toSet
-    val leaf = graft.incremental.Ivm.leafFn(spark, known)
     val stable = mutable.Set[String]() ++ carriedTables
     newProg.views.foreach { v =>
-      val deps = graft.incremental.Ivm
-        .leafNodes(spark.sql(v.sql).queryExecution.analyzed, leaf)
-        .map(_._1).toSet
-      if (oldViewSql.get(v.name).contains(v.sql) && deps.subsetOf(stable))
+      if (oldViewSql.get(v.name).contains(v.sql) &&
+        next.viewDeps(v.name).subsetOf(stable))
         stable += v.name
-      ()
     }
 
     // seed step: replay carried table snapshots (already canonical
@@ -1525,11 +1582,8 @@ final class Pipeline(spark: SparkSession,
     recShapes.nonEmpty && recShapes.values.forall(_.isDefined)
   /** External (non-member) relations feeding the recursive group. */
   private val recExtRels: Set[String] =
-    recShapes.values.flatten.flatten.flatMap {
-      case Ivm.Linear(rs) => rs
-      case Ivm.Multilinear(rs) => rs.toSet
-      case _ => Set.empty[String]
-    }.toSet -- recursiveNames
+    recShapes.values.flatten.flatten.flatMap(_.relations).toSet --
+      recursiveNames
 
   /** How the last step maintained the recursive group: "incremental"
     * (semi-naive continuation) or "recompute" (fixpoint from scratch +
@@ -1650,10 +1704,6 @@ final class Pipeline(spark: SparkSession,
   private def multisetOf(rel: String,
       states: collection.Map[String, DataFrame]): DataFrame =
     states.get(rel).map(ZSets.toMultiset).getOrElse(emptyOf(rel))
-
-  private def stateOrEmpty(states: collection.Map[String, DataFrame],
-      rel: String): DataFrame =
-    states.getOrElse(rel, ZSets.lift(emptyOf(rel)).limit(0))
 
   /** Evaluate the view SQL with explicit relation bindings (overwrites the
     * session temp views; `step` re-registers canonical views at the end).
@@ -1784,12 +1834,7 @@ final class Pipeline(spark: SparkSession,
       // through every consumer
       val dCon = ZSets.consolidate(d).localCheckpoint(false)
       relDeltas(name) = dCon
-      tableState(name) =
-        if (traceBacked(name)) traceIntegrate(name, dCon)
-        else (tableState.get(name) match {
-          case Some(prev) => IncrementalOps.mergeDelta(prev, dCon)
-          case None => dCon
-        }).localCheckpoint(false)
+      integrate(tableState, name, dCon, traceBacked(name))
     }
 
     // fused sign probe for all table deltas (one job; also warms their
@@ -1835,6 +1880,7 @@ final class Pipeline(spark: SparkSession,
       // content (innerViewState); viewState holds only EMITTED rows
       // (what consumers and ad-hoc queries see)
       val oldSelf = innerViewState.get(v.name).orElse(oldViews.get(v.name))
+      val untouched = !shapes(v.name).relations.exists(relDeltas.contains)
       val rawDelta = if (nowViews(v.name))
         // clock-dependent: always recompute against the bound step time
         recomputeDiff(None, bindClock(v.sql), newStates, oldSelf)
@@ -1854,52 +1900,40 @@ final class Pipeline(spark: SparkSession,
       // retracts it when data arrives (StreamingTests testAggregate).
       // Touched views MUST take the normal dispatch: the stateful fast
       // paths (linear-agg partials, chain state) initialize on first
-      // touch, and a recompute bypass would leave them unseeded.
-      else if (stepsRun == 0L && (shapes(v.name) match {
-        case Ivm.Linear(rels) => !rels.exists(relDeltas.contains)
-        case Ivm.Multilinear(rels) => !rels.exists(relDeltas.contains)
-        case Ivm.GroupAgg(rel, _, _, _) => !relDeltas.contains(rel)
-        case Ivm.AggOverMulti(rels, _, _) => !rels.exists(relDeltas.contains)
-        case Ivm.SemiAnti(l, r, _) => !(l ++ r).exists(relDeltas.contains)
-        case Ivm.Opaque => false // recomputeDiff below regardless
-      }))
+      // touch, and a recompute bypass would leave them unseeded. An
+      // Opaque view reads no classified relation and recomputes anyway.
+      else if (stepsRun == 0L && untouched)
         recomputeDiff(Some(v.name), v.sql, newStates, oldSelf)
+      // later steps: a view no delta touched has no delta
+      else if (untouched && shapes(v.name) != Ivm.Opaque)
+        ZSets.lift(emptyViews(v.name))
       else shapes(v.name) match {
         case Ivm.Linear(rels) =>
           evalLinear(v.name, v.sql, rels, relDeltas)
-        case Ivm.Multilinear(rels) if rels.exists(relDeltas.contains) =>
+        case Ivm.Multilinear(rels) =>
           evalMultilinear(v.name, v.sql, rels, relDeltas, oldStates,
             newStates)
-        case Ivm.Multilinear(_) => ZSets.lift(emptyViews(v.name))
         case Ivm.GroupAgg(rel, _, outCols, chainCols)
-            if relDeltas.contains(rel) && chainCols.nonEmpty
-              && program.tables.exists(t => t.name == rel && t.appendOnly) =>
+            if chainCols.nonEmpty &&
+              program.tables.exists(t => t.name == rel && t.appendOnly) =>
           // append-only source + pure MIN/MAX view: chain fast path —
           // state is the view output itself, merged with least/greatest
           // (chain_aggregate.rs; no touched-group re-scan of the source)
           evalChainAgg(v.name, v.sql, rel, outCols, chainCols,
-            relDeltas(rel),
-            oldSelf)
+            relDeltas(rel), oldSelf)
         case Ivm.GroupAgg(rel, groupCols, outCols, _)
-            if relDeltas.contains(rel) && groupCols.nonEmpty &&
+            if groupCols.nonEmpty &&
               linearAggInfo(v.name, v.sql).isDefined =>
           // all-SUM/COUNT view: partial-sum state, delta-only aggregation
-          evalLinearAgg(v.name, v.sql, rel, outCols, relDeltas,
-            oldSelf)
-        case Ivm.GroupAgg(rel, groupCols, outCols, _)
-            if relDeltas.contains(rel) =>
+          evalLinearAgg(v.name, v.sql, rel, outCols, relDeltas, oldSelf)
+        case Ivm.GroupAgg(rel, groupCols, outCols, _) =>
           evalGroupAgg(v.name, v.sql, rel, groupCols, outCols,
-            relDeltas(rel),
-            newStates, oldSelf)
-        case Ivm.GroupAgg(_, _, _, _) => ZSets.lift(emptyViews(v.name))
-        case Ivm.AggOverMulti(rels, groupPos, outCols)
-            if rels.exists(relDeltas.contains) =>
+            relDeltas(rel), newStates, oldSelf)
+        case Ivm.AggOverMulti(rels, groupPos, outCols) =>
           evalAggOverMulti(v.sql, v.name, rels, groupPos, outCols,
             relDeltas, oldStates, newStates, oldSelf)
-        case Ivm.AggOverMulti(_, _, _) => ZSets.lift(emptyViews(v.name))
-        case Ivm.SemiAnti(l, r, anti) if (l ++ r).exists(relDeltas.contains) =>
+        case Ivm.SemiAnti(l, r, anti) =>
           evalSemiAnti(v.sql, v.name, l, r, anti, relDeltas, oldStates)
-        case Ivm.SemiAnti(_, _, _) => ZSets.lift(emptyViews(v.name))
         case Ivm.Opaque =>
           recomputeDiff(Some(v.name), v.sql, newStates, oldSelf)
       }
@@ -1924,21 +1958,12 @@ final class Pipeline(spark: SparkSession,
         case Some(cn) =>
           val trueDelta =
             ZSets.consolidate(gatedDelta).localCheckpoint(false)
-          innerViewState(v.name) = (innerViewState.get(v.name) match {
-            case Some(prev) => IncrementalOps.mergeDelta(prev, trueDelta)
-            case None => trueDelta
-          }).localCheckpoint(false)
+          integrate(innerViewState, v.name, trueDelta)
           emitFinalGate(v.name, cn, trueDelta)
         case None => ZSets.consolidate(gatedDelta)
       }).localCheckpoint(false)
-      val newView =
-        if (traceBacked(v.name)) traceIntegrate(v.name, vDelta)
-        else (viewState.get(v.name) match {
-          case Some(prev) => IncrementalOps.mergeDelta(prev, vDelta)
-          case None => vDelta
-        }).localCheckpoint(false)
-      viewState(v.name) = newView
-      newStates(v.name) = newView
+      newStates(v.name) =
+        integrate(viewState, v.name, vDelta, traceBacked(v.name))
       relDeltas(v.name) = vDelta
       v.name -> vDelta
     }
@@ -2011,13 +2036,8 @@ final class Pipeline(spark: SparkSession,
       ((tableNames ++ program.views.map(_.name)).toSet -- recursiveNames)
         .foreach(r => multisetOf(r, newStates).createOrReplaceTempView(r))
       val totals = evalRecursiveGroup()
-      group.map { m =>
-        val now = ZSets.lift(totals(m.name))
-        m.name -> (oldViews.get(m.name) match {
-          case Some(prev) => now.unionByName(ZSets.negate(prev))
-          case None => now
-        })
-      }.toMap
+      group.map(m => m.name ->
+        diff(ZSets.lift(totals(m.name)), oldViews.get(m.name))).toMap
     }
   }
 
@@ -2043,7 +2063,6 @@ final class Pipeline(spark: SparkSession,
       oldStates: collection.Map[String, DataFrame],
       newStates: collection.Map[String, DataFrame],
       oldViews: Map[String, DataFrame]): Map[String, DataFrame] = {
-    val known = (tableNames ++ program.views.map(_.name)).toSet
     // each member's body is analyzed ONCE per step (against the canonical
     // temp views); every seed term and every fixpoint round then GRAFTS
     // its bindings onto the cached branch plans by object-identity leaf
@@ -2051,17 +2070,11 @@ final class Pipeline(spark: SparkSession,
     // inside the round closure was the dominant driver-side cost of deep
     // recursions (ADVICE r3: analysis cost scaled rounds × members ×
     // branches).
-    val leaf = Ivm.leafFn(spark, known)
-    val analyzed: Map[String, Seq[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)])]] =
+    val analyzed: Map[String, Seq[(LogicalPlan, Seq[(String, LogicalPlan)])]] =
       group.map { m =>
-        // transformPlan, like EVERY other evaluation path — the
-        // incremental-recursion branches must divide (ceil/floor/…)
-        // exactly like batch (increc testRecursiveInMiddle caught the
-        // bare analyzed plan here: `v/2` evaluated fractionally)
-        val plan = org.apache.spark.sql.graft.IntegerDivision
-          .transformPlan(spark.sql(m.sql).queryExecution.analyzed)
-        val bs = Ivm.unionBranches(plan, leaf).map(b => (b, Ivm.leafNodes(b, leaf)))
+        val a = computeAnalyzedLeaves(m.sql)
+        val bs = Ivm.unionBranches(a.plan, a.leaf)
+          .map(b => (b, Ivm.leafNodes(b, a.leaf)))
         require(bs.length == recShapes(m.name).get.length,
           s"branch structure drifted for ${m.name}: ${bs.length} branches " +
             s"now vs ${recShapes(m.name).get.length} at classification")
@@ -2070,13 +2083,15 @@ final class Pipeline(spark: SparkSession,
     def branch(m: String, bi: Int, outCols: Seq[String],
         binds: Map[String, DataFrame]): DataFrame = {
       val (b, slots) = analyzed(m)(bi)
-      org.apache.spark.sql.graft.Shims.ofRows(spark,
-        graftPlan(b, slots, binds)).toDF(outCols: _*)
+      Shims.ofRows(spark, graftPlan(b, slots, binds)).toDF(outCols: _*)
     }
     val oldTotals = group.map(m => m.name -> multisetOf(m.name, oldViews)).toMap
     val outCols = group.map(m => m.name -> emptyViews(m.name).columns.toSeq).toMap
 
     val seeds: Map[String, DataFrame] = group.flatMap { m =>
+      // members pinned to the old totals, external slots telescoped
+      def state(states: collection.Map[String, DataFrame])(r: String) =
+        Some(if (recursiveNames(r)) oldTotals(r) else multisetOf(r, states))
       val terms = recShapes(m.name).get.zipWithIndex.flatMap { case (sh, bi) =>
         sh match {
           case Ivm.Linear(rels) if rels.exists(touchedExt) =>
@@ -2088,16 +2103,10 @@ final class Pipeline(spark: SparkSession,
           case Ivm.Multilinear(rels) =>
             rels.zipWithIndex
               .filter { case (r, _) => !recursiveNames(r) && touchedExt(r) }
-              .map { case (_, i) =>
-                val binds = rels.zipWithIndex.map { case (rj, j) =>
-                  rj -> (
-                    if (recursiveNames(rj)) oldTotals(rj)
-                    else if (j == i)
-                      ZSets.toMultiset(relDeltas(rj)).hint("broadcast")
-                    else if (j < i) multisetOf(rj, newStates)
-                    else multisetOf(rj, oldStates))
-                }.toMap
-                branch(m.name, bi, outCols(m.name), binds)
+              .flatMap { case (r, i) =>
+                telescope(rels, i, state(oldStates), state(newStates))
+                  .map(bind => branch(m.name, bi, outCols(m.name),
+                    bind(ZSets.toMultiset(relDeltas(r)))))
               }
           case _ => Nil
         }
@@ -2109,6 +2118,10 @@ final class Pipeline(spark: SparkSession,
     val steps: Map[String, graft.recursive.Fixpoint.RoundState => DataFrame] =
       group.map { m =>
         m.name -> ((st: graft.recursive.Fixpoint.RoundState) => {
+          // one term per member slot: members read the round totals,
+          // external relations their NEW snapshots
+          val state = (r: String) =>
+            Some(if (recursiveNames(r)) st.totals(r) else multisetOf(r, newStates))
           val terms = recShapes(m.name).get.zipWithIndex.flatMap {
             case (sh, bi) => sh match {
               case Ivm.Linear(rels) if rels.exists(recursiveNames) =>
@@ -2117,14 +2130,9 @@ final class Pipeline(spark: SparkSession,
                 Seq(branch(m.name, bi, outCols(m.name), binds))
               case Ivm.Multilinear(rels) =>
                 rels.zipWithIndex.filter { case (r, _) => recursiveNames(r) }
-                  .map { case (_, i) =>
-                    val binds = rels.zipWithIndex.map { case (rj, j) =>
-                      rj -> (
-                        if (j == i) st.deltas(rj).hint("broadcast")
-                        else if (recursiveNames(rj)) st.totals(rj)
-                        else multisetOf(rj, newStates))
-                    }.toMap
-                    branch(m.name, bi, outCols(m.name), binds)
+                  .flatMap { case (r, i) =>
+                    telescope(rels, i, state, state).map(bind =>
+                      branch(m.name, bi, outCols(m.name), bind(st.deltas(r))))
                   }
               case _ => Nil
             }
@@ -2142,136 +2150,119 @@ final class Pipeline(spark: SparkSession,
     out
   }
 
+  /** Union of a rule's delta terms; the view's empty delta when no term
+    * applies.
+    */
+  private def sumTerms(viewName: String, terms: Seq[DataFrame]): DataFrame =
+    if (terms.isEmpty) ZSets.lift(emptyViews(viewName))
+    else terms.reduce(_ unionByName _)
+
+  /** Z-set difference `now − prev`; `now` when there is no previous
+    * content.
+    */
+  private def diff(now: DataFrame, prev: Option[DataFrame]): DataFrame =
+    prev.fold(now)(p => now.unionByName(ZSets.negate(p)))
+
+  /** The rows of a previous output `old` in the groups a step touched
+    * (`touched` holds their keys, aligned with the output key columns
+    * `outCols`) — the rows a touched-group rule retracts. No key columns
+    * is a global aggregate, whose one group is always touched.
+    */
+  private def oldTouched(old: DataFrame, touched: => DataFrame,
+      outCols: Seq[String]): DataFrame =
+    if (outCols.isEmpty) old
+    else IncrementalOps.splitTouched(old, touched.toDF(outCols: _*),
+      outCols)._1
+
   /** Linear: Q(Δ) directly — bind every referenced relation to its delta
     * (positive part, then negated negative part). One row in, its rows
-    * out; nothing touches state.
+    * out; nothing touches state. Linear bodies are subquery-free by
+    * classification, so terms graft onto the ONE cached analysis.
     */
   private def evalLinear(viewName: String, sql: String, rels: Set[String],
       relDeltas: collection.Map[String, DataFrame]): DataFrame = {
-    // Linear bodies are subquery-free by classification; terms graft
-    // their delta bindings onto the ONE cached analysis (was a full
-    // re-analysis + |rels| temp-view rebinds per term per step).
-    // Bindings whose types drifted from the cached analysis fall back
-    // to the re-analysis path (implicit coercions).
-    val shims = org.apache.spark.sql.graft.Shims
-    val (plan0, leaves) = analyzedLeaves(viewName, sql)
-    def part(sign: DataFrame => DataFrame): Map[String, DataFrame] =
-      rels.map(r => r -> relDeltas.get(r)
-        .map(d => ZSets.toMultiset(sign(d)))
-        .getOrElse(emptyOf(r))).toMap
-    // identity and negate parts carry identical schemas: one check
-    val graftOk = bindsConform(leaves, part(identity))
-    def run(binds: Map[String, DataFrame]): DataFrame =
-      if (graftOk) shims.ofRows(spark, graftPlan(plan0, leaves, binds))
-      else evalWith(sql, binds)
-    // evaluate only the sign parts that exist in this step's deltas
-    val (hasPos, hasNeg) = rels.toSeq.map(signsOf(_, relDeltas))
-      .foldLeft((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
-    val terms =
-      (if (hasPos) Seq(ZSets.lift(run(part(identity)))) else Nil) ++
-      (if (hasNeg)
-        Seq(ZSets.negate(ZSets.lift(run(part(ZSets.negate)))))
-      else Nil)
-    if (terms.isEmpty) ZSets.lift(run(part(identity)).limit(0))
-    else terms.reduce(_ unionByName _)
+    val a = Some(analyzedLeaves(viewName, sql))
+    sumTerms(viewName, signedTerms(signsOf(rels, relDeltas))(sign =>
+      evalBound(sql, a, deltaBinds(rels, relDeltas, sign))))
   }
 
-  /** Multilinear telescoping: term i binds r_j→new (j<i), Δ_i (broadcast),
-    * r_j→old (j>i). Snapshots are probed by the broadcast delta — no
-    * state shuffle.
+  /** Bindings of telescoped term i of a multilinear body: slot j<i reads
+    * `after(r_j)`, slot j>i `before(r_j)`, and slot i the term's delta,
+    * broadcast so the snapshots are only probed — no state shuffle.
+    * None when a state leg has never integrated a delta (no state): the
+    * term is then empty by construction and is skipped with its plan and
+    * jobs — common in seeding steps, where relations later in the slot
+    * order pin to old state that does not exist yet. A state that exists
+    * but has retracted to zero rows still evaluates, so exactness is
+    * untouched.
     */
-  /** A telescoping term is empty by construction when any snapshot leg
-    * binds a relation that has NEVER integrated a delta (no entry in
-    * the state map) — common in seeding steps, where relations later in
-    * the slot order pin to old state that does not exist yet. Skipping
-    * such terms skips their plan + jobs wholesale; a state that exists
-    * but has retracted to zero rows still evaluates (the term just
-    * yields no rows), so exactness is untouched.
-    */
-  private def termLegsLive(rels: Seq[String], i: Int,
-      oldStates: collection.Map[String, DataFrame],
-      newStates: collection.Map[String, DataFrame]): Boolean =
-    rels.zipWithIndex.forall { case (rj, j) =>
-      j == i || (if (j < i) newStates.contains(rj)
-                 else oldStates.contains(rj))
-    }
+  private def telescope(rels: Seq[String], i: Int,
+      before: String => Option[DataFrame],
+      after: String => Option[DataFrame])
+      : Option[DataFrame => Map[String, DataFrame]] = {
+    val legs = rels.zipWithIndex.collect { case (rj, j) if j != i =>
+      rj -> (if (j < i) after(rj) else before(rj)) }
+    if (legs.exists(_._2.isEmpty)) None
+    else Some(d => legs.map { case (rj, st) => rj -> st.get }.toMap +
+      (rels(i) -> d.hint("broadcast")))
+  }
 
+  /** The delta terms of a multilinear body: one telescoped term per
+    * relation with a delta, each split into its ± sign parts; `eval`
+    * evaluates the body under one term's bindings.
+    */
+  private def multilinearTerms(rels: Seq[String],
+      relDeltas: collection.Map[String, DataFrame],
+      oldStates: collection.Map[String, DataFrame],
+      newStates: collection.Map[String, DataFrame])(
+      eval: Map[String, DataFrame] => DataFrame): Seq[DataFrame] = {
+    def state(states: collection.Map[String, DataFrame])(r: String) =
+      states.get(r).map(ZSets.toMultiset)
+    rels.zipWithIndex.flatMap { case (ri, i) =>
+      for {
+        d <- relDeltas.get(ri).toSeq
+        bind <- telescope(rels, i, state(oldStates), state(newStates)).toSeq
+        term <- signedTerms(signsOf(Seq(ri), relDeltas))(sign =>
+          eval(bind(ZSets.toMultiset(sign(d)))))
+      } yield term
+    }
+  }
+
+  /** Multilinear telescoping ([[multilinearTerms]]) over the view's
+    * cached analysis.
+    */
   private def evalMultilinear(viewName: String, sql: String,
       rels: Seq[String],
       relDeltas: collection.Map[String, DataFrame],
       oldStates: collection.Map[String, DataFrame],
       newStates: collection.Map[String, DataFrame]): DataFrame = {
-    val shims = org.apache.spark.sql.graft.Shims
-    val (plan0, leaves) = analyzedLeaves(viewName, sql)
-    def run(binds: Map[String, DataFrame]): DataFrame =
-      shims.ofRows(spark, graftPlan(plan0, leaves, binds))
-    val terms = rels.zipWithIndex.flatMap { case (ri, i) =>
-      relDeltas.get(ri).toSeq
-        .filter(_ => termLegsLive(rels, i, oldStates, newStates))
-        .flatMap { d =>
-        def bind(delta: DataFrame): Map[String, DataFrame] =
-          rels.zipWithIndex.map { case (rj, j) =>
-            rj -> (if (j < i) multisetOf(rj, newStates)
-              else if (j > i) multisetOf(rj, oldStates)
-              else delta.hint("broadcast"))
-          }.toMap
-        val (hasPos, hasNeg) = signsOf(ri, relDeltas)
-        (if (hasPos)
-          Seq(ZSets.lift(run(bind(ZSets.toMultiset(d))))) else Nil) ++
-        (if (hasNeg)
-          Seq(ZSets.negate(ZSets.lift(run(
-            bind(ZSets.toMultiset(ZSets.negate(d))))))) else Nil)
-      }
-    }
-    if (terms.isEmpty)
-      ZSets.lift(run(rels.map(r => r -> emptyOf(r)).toMap).limit(0))
-    else terms.reduce(_ unionByName _)
+    val a = analyzedLeaves(viewName, sql)
+    sumTerms(viewName,
+      multilinearTerms(rels, relDeltas, oldStates, newStates)(binds =>
+        Shims.ofRows(spark, graftPlan(a.plan, a.leaves, binds))))
   }
 
   /** Touched-group re-aggregation: restrict the source snapshot to groups
     * present in the delta (broadcast semi-probe), re-run the view SQL over
     * the restriction, and retract the old output rows of those groups.
     * Exact for any aggregate; global aggregates (no keys) re-evaluate the
-    * single group.
+    * single group. GroupAgg bodies are single-relation and subquery-free
+    * by classification, so the restriction grafts onto the ONE cached
+    * analysis.
     */
   private def evalGroupAgg(viewName: String, sql: String, rel: String,
       groupCols: Seq[String],
       outCols: Seq[String], delta: DataFrame,
       newStates: collection.Map[String, DataFrame],
       oldView: Option[DataFrame]): DataFrame = {
-    // GroupAgg bodies are single-relation and subquery-free by
-    // classification; the touched-group re-aggregation grafts its
-    // restriction onto the ONE cached analysis (was a re-analysis +
-    // temp-view rebind per step). Type-drifted bindings fall back to
-    // the re-analysis path (implicit coercions).
-    val shims = org.apache.spark.sql.graft.Shims
-    val (plan0, leaves) = analyzedLeaves(viewName, sql)
-    val snap = stateOrEmpty(newStates, rel)
-    val graftOk = bindsConform(leaves, Map(rel -> ZSets.toMultiset(snap)))
-    def run(bound: DataFrame): DataFrame =
-      if (graftOk)
-        shims.ofRows(spark, graftPlan(plan0, leaves, Map(rel -> bound)))
-      else evalWith(sql, Map(rel -> bound))
-    val old = oldView.getOrElse(
-      ZSets.lift(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (graftOk)
-          StructType(plan0.output.map(a =>
-            org.apache.spark.sql.types.StructField(
-              a.name, a.dataType, a.nullable)))
-        else evalWith(sql, Map(rel -> emptyOf(rel))).schema)))
-    if (groupCols.isEmpty) {
-      // global aggregate: one group, always touched
-      val newRows = run(ZSets.toMultiset(snap))
-      ZSets.lift(newRows).unionByName(ZSets.negate(old))
-    } else {
-      val touched = delta.select(groupCols.map(col): _*).distinct()
-      val (restricted, _) = IncrementalOps.splitTouched(snap, touched, groupCols)
-      val newRows = run(ZSets.toMultiset(restricted))
-      val touchedOut = touched.toDF(outCols: _*)
-      val (oldTouched, _) = IncrementalOps.splitTouched(old, touchedOut, outCols)
-      ZSets.lift(newRows).unionByName(ZSets.negate(oldTouched))
-    }
+    val snap = newStates.getOrElse(rel, ZSets.lift(emptyOf(rel)).limit(0))
+    lazy val touched = delta.select(groupCols.map(col): _*).distinct()
+    val restricted =
+      if (groupCols.isEmpty) snap
+      else IncrementalOps.splitTouched(snap, touched, groupCols)._1
+    val newRows = evalBound(sql, Some(analyzedLeaves(viewName, sql)),
+      Map(rel -> ZSets.toMultiset(restricted)))
+    diff(ZSets.lift(newRows), oldView.map(oldTouched(_, touched, outCols)))
   }
 
   // ------------------------------------------------ linear group aggs
@@ -2318,15 +2309,15 @@ final class Pipeline(spark: SparkSession,
       import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, SubqueryAlias}
       import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
-      def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-          : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+      def strip(p: LogicalPlan)
+          : LogicalPlan =
         p match { case s: SubqueryAlias => strip(s.child); case o => o }
       def exact(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
         case _: DecimalType | LongType | IntegerType | ShortType |
              ByteType => true
         case _ => false
       }
-      strip(analyzedLeaves(viewName, sql)._1) match {
+      strip(analyzedLeaves(viewName, sql).plan) match {
         case agg: Aggregate if agg.groupingExpressions.nonEmpty &&
             agg.groupingExpressions.forall(_.isInstanceOf[AttributeReference]) =>
           val aes = agg.aggregateExpressions
@@ -2384,8 +2375,7 @@ final class Pipeline(spark: SparkSession,
     val shims = org.apache.spark.sql.graft.Shims
     val info = linearAggMemo(viewName).get
     val agg0 = info.agg
-    val (_, leaves) = analyzedLeaves(viewName, sql)
-    val childLeaves = leaves.filter { case (_, node) =>
+    val childLeaves = analyzedLeaves(viewName, sql).leaves.filter { case (_, node) =>
       agg0.child.exists(_ eq node) }
     val delta = relDeltas(rel)
     val keyAttrs = agg0.groupingExpressions
@@ -2418,13 +2408,9 @@ final class Pipeline(spark: SparkSession,
     def negatePartials(df: DataFrame): DataFrame =
       df.select(keyNames.map(col) ++ pcols.map(c => (-col(c)).as(c)): _*)
 
-    val (hasPos, hasNeg) = signsOf(rel, relDeltas)
-    val sides =
-      (if (hasPos)
-        Seq(partials(ZSets.toMultiset(ZSets.positive(delta)))) else Nil) ++
-      (if (hasNeg)
-        Seq(negatePartials(partials(ZSets.toMultiset(
-          ZSets.negate(delta.filter(col(ZSets.W) < 0)))))) else Nil)
+    val sides = signedTerms(signsOf(Seq(rel), relDeltas),
+      lift = identity, negate = negatePartials)(sign =>
+      partials(ZSets.toMultiset(sign(delta))))
     if (sides.isEmpty) return ZSets.lift(emptyViews(viewName))
     // one materialization of the delta partials: the touched-key
     // broadcast, the state merge and the finalize all read it — without
@@ -2485,20 +2471,14 @@ final class Pipeline(spark: SparkSession,
     }
     val newRows = shims.ofRows(spark, Project(finals, proj))
 
-    val old = oldView.getOrElse(
-      ZSets.lift(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        evalWith(sql, Map(rel -> emptyOf(rel))).schema)))
-    val touchedOut = touched.toDF(outCols: _*)
-    val (oldTouched, _) = IncrementalOps.splitTouched(old, touchedOut, outCols)
     // the finalize Project reuses the ORIGINAL view plan's expression ids
     // (keyAliases above) so agg0's output expressions stay resolved; a
     // caller-side union over a frame carrying those ids trips Catalyst's
     // cached-constraint rewrite (key not found: <attr>). internalBarrier
     // severs plan constraints at this API edge — same sharp edge and same
     // fix as the migrate() bootstrap diff (see Shims.internalBarrier).
-    shims.internalBarrier(
-      ZSets.lift(newRows).unionByName(ZSets.negate(oldTouched)))
+    shims.internalBarrier(diff(ZSets.lift(newRows),
+      oldView.map(oldTouched(_, touched, outCols))))
   }
 
   /** Aggregate-over-join composite (the reference's two circuit nodes,
@@ -2515,54 +2495,26 @@ final class Pipeline(spark: SparkSession,
       oldStates: collection.Map[String, DataFrame],
       newStates: collection.Map[String, DataFrame],
       oldView: Option[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-    val shims = org.apache.spark.sql.graft.Shims
-
-    // ONE analysis per VIEW for the pipeline lifetime (was one per term
-    // per step): terms graft their leaf bindings onto the cached plan
-    val (aggPlan0, aggLeaves) = analyzedLeaves(viewName, sql)
-    val agg0 = aggPlan0.collectFirst { case a: Aggregate => a }
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val a = analyzedLeaves(viewName, sql)
+    val agg0 = a.plan.collectFirst { case x: Aggregate => x }
       .getOrElse(sys.error(s"view $viewName lost its Aggregate node"))
-    lazy val childLeaves = aggLeaves.filter { case (_, node) =>
+    lazy val childLeaves = a.leaves.filter { case (_, node) =>
       agg0.child.exists(_ eq node) }
 
     def positional(df: DataFrame): DataFrame =
       df.toDF(df.columns.indices.map(i => s"_c$i"): _*)
 
-    // 1. delta of the join body (telescoped multilinear terms); terms
-    // with a never-populated snapshot leg are empty by construction
-    // and skipped before planning (see termLegsLive)
-    val terms = rels.zipWithIndex.flatMap { case (ri, i) =>
-      relDeltas.get(ri).toSeq
-        .filter(_ => termLegsLive(rels, i, oldStates, newStates))
-        .flatMap { d =>
-        def bind(delta: DataFrame): Map[String, DataFrame] =
-          rels.zipWithIndex.map { case (rj, j) =>
-            rj -> (if (j < i) multisetOf(rj, newStates)
-              else if (j > i) multisetOf(rj, oldStates)
-              else delta.hint("broadcast"))
-          }.toMap
-        def body(delta: DataFrame): DataFrame =
-          positional(shims.ofRows(spark,
-            graftPlan(agg0.child, childLeaves, bind(delta))))
-        val (hasPos, hasNeg) = signsOf(ri, relDeltas)
-        (if (hasPos) Seq(ZSets.lift(body(ZSets.toMultiset(d)))) else Nil) ++
-        (if (hasNeg)
-          Seq(ZSets.negate(ZSets.lift(body(
-            ZSets.toMultiset(ZSets.negate(d)))))) else Nil)
-      }
-    }
+    // 1. delta of the join body (telescoped multilinear terms)
+    val terms = multilinearTerms(rels, relDeltas, oldStates, newStates)(
+      binds => positional(Shims.ofRows(spark,
+        graftPlan(agg0.child, childLeaves, binds))))
     if (terms.isEmpty) return ZSets.lift(emptyViews(viewName))
     val dJ = ZSets.consolidate(terms.reduce(_ unionByName _))
       .localCheckpoint(false)
 
     // 2. merge the hidden join state (scan-side; broadcast delta keys)
-    val newJ = (joinState.get(viewName) match {
-      case Some(st) => IncrementalOps.mergeDelta(st, dJ)
-      case None => dJ
-    }).localCheckpoint(false)
-    joinState(viewName) = newJ
+    val newJ = integrate(joinState, viewName, dJ)
 
     // 3. restrict to touched groups (positional key names)
     val posKeys = groupPos.map(p => s"_c$p")
@@ -2572,28 +2524,12 @@ final class Pipeline(spark: SparkSession,
       else IncrementalOps.splitTouched(newJ, touched, posKeys)._1
 
     // 4. graft the restricted multiset back under the cached Aggregate
-    val childOut: Seq[Attribute] = agg0.child.output
-    val restPlan = ZSets.toMultiset(restricted).queryExecution.analyzed
-    require(restPlan.output.size == childOut.size,
-      s"join-state arity drifted for $viewName")
-    val aliases = childOut.zip(restPlan.output).map { case (orig, cur) =>
-      require(cur.dataType == orig.dataType,
-        s"join-state type drifted for $viewName: $cur vs $orig")
-      Alias(cur, orig.name)(exprId = orig.exprId)
-    }
-    val newRows = shims.ofRows(spark,
-      Aggregate(agg0.groupingExpressions, agg0.aggregateExpressions,
-        Project(aliases, restPlan)))
+    val newRows = Shims.ofRows(spark, agg0.withNewChildren(Seq(rebind(
+      agg0.child.output, ZSets.toMultiset(restricted),
+      s"join state of $viewName"))))
 
     // 5. retract the old output rows of touched groups
-    val oldTouched = oldView.map { o =>
-      if (outCols.isEmpty) o
-      else IncrementalOps.splitTouched(o, touched.toDF(outCols: _*), outCols)._1
-    }
-    oldTouched match {
-      case Some(o) => ZSets.lift(newRows).unionByName(ZSets.negate(o))
-      case None => ZSets.lift(newRows)
-    }
+    diff(ZSets.lift(newRows), oldView.map(oldTouched(_, touched, outCols)))
   }
 
   /** Semi/anti-join delta rule (shape [[Ivm.SemiAnti]]): maintain an
@@ -2619,36 +2555,26 @@ final class Pipeline(spark: SparkSession,
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
-    val shims = org.apache.spark.sql.graft.Shims
 
-    // ONE analysis per VIEW for the whole pipeline lifetime (was one per
-    // step — the per-step Catalyst analysis was a measurable slice of the
-    // step's driver floor): every term grafts its own leaf bindings and
-    // indicator right side onto this plan, so the cached analysis can
-    // never go stale — no term evaluates a plan0 leaf as-bound.
+    // derived ONCE per VIEW from its cached analysis: every term grafts
+    // its own leaf bindings and indicator right side onto this plan, so
+    // the cached analysis can never go stale — no term evaluates a plan0
+    // leaf as-bound
     val (plan0, sp0, leftLeaves, rightLeaves, indKey) =
-      semiAntiCache.getOrElseUpdate(viewName, evalLock.synchronized {
-        val p0 = Ivm.rewriteSubqueries(spark.sql(sql).queryExecution.analyzed)
+      semiAntiCache.getOrElseUpdate(viewName, {
+        val a = analyzedLeaves(viewName, sql)
+        val p0 = Ivm.rewriteSubqueries(a.plan)
         val sp = Ivm.semiParts(p0).getOrElse(
           sys.error(s"view $viewName lost its semi-join shape"))
-        val known = (tableNames ++ program.views.map(_.name)).toSet
-        val leaf = Ivm.leafFn(spark, known)
         // indicator identity: canonicalized right subtree + key types —
         // a semi and an anti view over the SAME subquery share one
         // indicator state and one delta computation per step
         val ik = sp.join.right.canonicalized.toString + "|" +
           sp.rightKeys.map(_.dataType.catalogString).mkString(",")
-        (p0, sp, Ivm.leafNodes(sp.join.left, leaf),
-          Ivm.leafNodes(sp.join.right, leaf), ik)
+        (p0, sp, Ivm.leafNodes(sp.join.left, a.leaf),
+          Ivm.leafNodes(sp.join.right, a.leaf), ik)
       })
     val names = sp0.rightKeys.indices.map(i => s"_k$i")
-
-    // delta bindings for one side: changed rels → signed delta multiset,
-    // unchanged rels → empty (the linear delta rule on that subtree)
-    def deltaPart(rels: Set[String], sign: DataFrame => DataFrame) =
-      rels.map(r => r -> relDeltas.get(r)
-        .map(d => ZSets.toMultiset(sign(d)))
-        .getOrElse(emptyOf(r))).toMap
 
     // 1. indicator maintenance: ΔKB = Δ(π_keys(right side)) via the linear
     //    rule on the right subtree, then incremental DISTINCT. Memoized by
@@ -2662,27 +2588,20 @@ final class Pipeline(spark: SparkSession,
     // (r15 verdict). Only same-indicator callers serialize, which is
     // the required semantics (one indicator state fill per step).
     def computeIndicator(): Option[DataFrame] = {
-        val (rPos, rNeg) = rightRels.toSeq.map(signsOf(_, relDeltas))
-          .foldLeft((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
-        if (!rPos && !rNeg) None
-        else {
-          val proj = sp0.rightKeys.zipWithIndex.map { case (a, i) =>
-            Alias(a, s"_k$i")()
-          }
-          def keyTerm(sign: DataFrame => DataFrame): DataFrame = {
-            shims.ofRows(spark, graftPlan(Project(proj, sp0.join.right),
-              rightLeaves, deltaPart(rightRels, sign)))
-          }
-          val kTerms =
-            (if (rPos) Seq(ZSets.lift(keyTerm(identity))) else Nil) ++
-            (if (rNeg)
-              Seq(ZSets.negate(ZSets.lift(keyTerm(ZSets.negate)))) else Nil)
-          val dKB = ZSets.consolidate(kTerms.reduce(_ unionByName _))
-          val (st, d) = IncrementalOps.distinctStep(
-            indicatorState.get(indKey), dKB)
-          indicatorState(indKey) = st.localCheckpoint(false)
-          Some(d.localCheckpoint(false))
-        }
+      val proj = sp0.rightKeys.zipWithIndex.map { case (a, i) =>
+        Alias(a, s"_k$i")()
+      }
+      val kTerms = signedTerms(signsOf(rightRels, relDeltas))(sign =>
+        Shims.ofRows(spark, graftPlan(Project(proj, sp0.join.right),
+          rightLeaves, deltaBinds(rightRels, relDeltas, sign))))
+      if (kTerms.isEmpty) None
+      else {
+        val dKB = ZSets.consolidate(kTerms.reduce(_ unionByName _))
+        val (st, d) = IncrementalOps.distinctStep(
+          indicatorState.get(indKey), dKB)
+        indicatorState(indKey) = st.localCheckpoint(false)
+        Some(d.localCheckpoint(false))
+      }
     }
     val dI: Option[DataFrame] =
       if (!rightTouched) None
@@ -2700,19 +2619,13 @@ final class Pipeline(spark: SparkSession,
     // ancestors, so object identity can't anchor the join itself.
     def graft(leftBinds: Map[String, DataFrame],
         rows: DataFrame, forceSemi: Boolean): DataFrame = {
-      val rplan = rows.hint("broadcast").queryExecution.analyzed
-      require(rplan.output.size == sp0.rightKeys.size,
-        s"indicator arity drifted for $viewName")
-      val aliases = sp0.rightKeys.zip(rplan.output).map { case (orig, cur) =>
-        require(cur.dataType == orig.dataType,
-          s"indicator type drifted for $viewName: $cur vs $orig")
-        Alias(cur, orig.name)(exprId = orig.exprId)
-      }
+      val right = rebind(sp0.rightKeys, rows.hint("broadcast"),
+        s"indicator of $viewName")
       val repl = leafReplMap(leftLeaves, leftBinds)
-      shims.ofRows(spark, plan0.transformUp {
+      Shims.ofRows(spark, plan0.transformUp {
         case p if repl.containsKey(p) => repl.get(p)
         case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
-          j.copy(right = Project(aliases, rplan),
+          j.copy(right = right,
             joinType = if (forceSemi) LeftSemi else sp0.join.joinType)
       })
     }
@@ -2720,28 +2633,20 @@ final class Pipeline(spark: SparkSession,
     // 2. ΔA term against I_new, restricted scan-side to the delta's own
     //    keys first so only a delta-sized key set is broadcast; only the
     //    sign parts present in the left deltas are evaluated
-    val (lPos, lNeg) = leftRels.toSeq.map(signsOf(_, relDeltas))
-      .foldLeft((false, false))((a, b) => (a._1 || b._1, a._2 || b._2))
-    val signs: Seq[(DataFrame => DataFrame, Boolean)] =
-      (if (lPos) Seq((identity[DataFrame] _, false)) else Nil) ++
-        (if (lNeg) Seq((ZSets.negate _, true)) else Nil)
-    val t1: Seq[DataFrame] =
-      if (!leftRels.exists(relDeltas.contains)) Nil
-      else signs.map { case (sign, negOut) =>
-        val binds = deltaPart(leftRels, sign)
-        val probe = shims.ofRows(spark, graftPlan(Project(
-          sp0.leftKeys.zipWithIndex.map { case (a, i) => Alias(a, s"_k$i")() },
-          sp0.join.left), leftLeaves, binds))
-        val present = indicatorState.get(indKey)
-          .map(st => st.filter(col(ZSets.W) > 0).drop(ZSets.W))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(names.zip(sp0.rightKeys).map { case (n, a) =>
-              org.apache.spark.sql.types.StructField(n, a.dataType) })))
-        val restricted = IncrementalOps.splitTouched(present, probe, names)._1
-        val res = graft(binds, restricted, forceSemi = false)
-        if (negOut) ZSets.negate(ZSets.lift(res)) else ZSets.lift(res)
-      }
+    val t1 = signedTerms(signsOf(leftRels, relDeltas)) { sign =>
+      val binds = deltaBinds(leftRels, relDeltas, sign)
+      val probe = Shims.ofRows(spark, graftPlan(Project(
+        sp0.leftKeys.zipWithIndex.map { case (a, i) => Alias(a, s"_k$i")() },
+        sp0.join.left), leftLeaves, binds))
+      val present = indicatorState.get(indKey)
+        .map(st => st.filter(col(ZSets.W) > 0).drop(ZSets.W))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(names.zip(sp0.rightKeys).map { case (n, a) =>
+            org.apache.spark.sql.types.StructField(n, a.dataType) })))
+      val restricted = IncrementalOps.splitTouched(present, probe, names)._1
+      graft(binds, restricted, forceSemi = false)
+    }
 
     // 3. transition terms against the PRE-STEP left side: a key appearing
     //    INSERTS matching old-left rows into a semi view and RETRACTS them
@@ -2774,9 +2679,7 @@ final class Pipeline(spark: SparkSession,
           negOut = !isAnti)
     }
 
-    val terms = t1 ++ t2
-    if (terms.isEmpty) ZSets.lift(emptyViews(viewName))
-    else terms.reduce(_ unionByName _)
+    sumTerms(viewName, t1 ++ t2)
   }
 
   /** Chain fast path: the delta's own aggregate (the view SQL over the
@@ -2801,32 +2704,22 @@ final class Pipeline(spark: SparkSession,
         "Z-set contains negative weights (over-retraction)")).cast("long"))
         .otherwise(col(ZSets.W)))
     // single-relation subquery-free body (same classification as
-    // GroupAgg): graft the delta onto the cached analysis; type-drifted
-    // deltas fall back to the re-analysis path
-    val (cPlan0, cLeaves) = analyzedLeaves(viewName, sql)
-    val cBinds = Map(rel -> ZSets.toMultiset(guarded))
-    val contrib =
-      if (bindsConform(cLeaves, cBinds))
-        org.apache.spark.sql.graft.Shims.ofRows(spark,
-          graftPlan(cPlan0, cLeaves, cBinds))
-      else evalWith(sql, cBinds)
+    // GroupAgg): the delta grafts onto the cached analysis
+    val contrib = evalBound(sql, Some(analyzedLeaves(viewName, sql)),
+      Map(rel -> ZSets.toMultiset(guarded)))
     oldView match {
       case None => ZSets.lift(contrib)
       case Some(old) =>
-        val oldTouched =
-          if (outCols.isEmpty) old
-          else {
-            val touched = contrib.select(outCols.map(col): _*)
-            IncrementalOps.splitTouched(old, touched, outCols)._1
-          }
+        val oldT = oldTouched(old, contrib.select(outCols.map(col): _*),
+          outCols)
         val mergeAggs = chainCols.map { case (n, isMax) =>
           (if (isMax) max(col(n)) else min(col(n))).as(n)
         }
-        val merged = oldTouched.drop(ZSets.W).unionByName(contrib)
+        val merged = oldT.drop(ZSets.W).unionByName(contrib)
           .groupBy(outCols.map(col): _*)
           .agg(mergeAggs.head, mergeAggs.tail: _*)
           .select(contrib.columns.map(col): _*)
-        ZSets.lift(merged).unionByName(ZSets.negate(oldTouched))
+        diff(ZSets.lift(merged), Some(oldT))
     }
   }
 
@@ -2844,39 +2737,24 @@ final class Pipeline(spark: SparkSession,
   private def recomputeDiff(viewKey: Option[String], sql: String,
       newStates: collection.Map[String, DataFrame],
       oldView: Option[DataFrame]): DataFrame = {
-    val shims = org.apache.spark.sql.graft.Shims
-    val graftable: Option[(
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)])] =
-      viewKey match {
-        case Some(k) =>
-          if (recomputeGraftable.getOrElseUpdate(k, {
-            val (p, ls) = analyzedLeaves(k, sql)
-            graftableOpaque(p, ls)
-          })) Some(analyzedLeaves(k, sql)) else None
-        case None =>
-          val (p, ls) = computeAnalyzedLeaves(sql)
-          if (graftableOpaque(p, ls)) Some((p, ls)) else None
-      }
+    val graftable: Option[Pipeline.Analyzed] = viewKey match {
+      case Some(k) =>
+        val a = analyzedLeaves(k, sql)
+        if (recomputeGraftable.getOrElseUpdate(k,
+          graftableOpaque(a.plan, a.leaves))) Some(a) else None
+      case None =>
+        Some(computeAnalyzedLeaves(sql))
+          .filter(a => graftableOpaque(a.plan, a.leaves))
+    }
+    // a graft-safe body reads only its leaves; re-analysis binds every
+    // program relation
+    val rels = graftable.fold(tableNames ++ program.views.map(_.name))(
+      _.leaves.map(_._1).distinct)
+    val now = evalBound(sql, graftable,
+      rels.map(r => r -> multisetOf(r, newStates)).toMap)
     // dedup (`a.*, b.*` star-joins repeat names) BEFORE the union with
     // the previous content, whose names are already deduped
-    val now = graftable match {
-      case Some((plan0, leaves))
-          if bindsConform(leaves, leaves.map(_._1).distinct
-            .map(r => r -> multisetOf(r, newStates)).toMap) =>
-        val binds = leaves.map(_._1).distinct
-          .map(r => r -> multisetOf(r, newStates)).toMap
-        ZSets.lift(Pipeline.dedupCols(
-          shims.ofRows(spark, graftPlan(plan0, leaves, binds))))
-      case _ =>
-        val rels = (tableNames ++ program.views.map(_.name)).toSet
-        val bindings = rels.map(r => r -> multisetOf(r, newStates)).toMap
-        ZSets.lift(Pipeline.dedupCols(evalWith(sql, bindings)))
-    }
-    oldView match {
-      case Some(prev) => now.unionByName(ZSets.negate(prev))
-      case None => now
-    }
+    diff(ZSets.lift(Pipeline.dedupCols(now)), oldView)
   }
 
   /** viewName → whether its Opaque body is graft-evaluable (memoized —
@@ -3014,6 +2892,17 @@ object Pipeline {
   private[runtime] object Memo {
     def of[T](v: T): Memo[T] = new Memo(() => v)
   }
+
+  /** One view body's analysis: the analyzed plan with the reference
+    * division semantics, its identified relation leaves, and the leaf
+    * identifier that found them. The identifier compares against the
+    * temp views registered at analysis time, so leaves of a plan derived
+    * later from this one (the semi/anti rewrite) are identified against
+    * the same registrations.
+    */
+  private final case class Analyzed(plan: LogicalPlan,
+      leaves: Seq[(String, LogicalPlan)],
+      leaf: LogicalPlan => Option[String])
 
   /** `INSERT INTO <table> <VALUES …|SELECT …>` (ad-hoc surface). */
   private[runtime] val InsertRe =

@@ -90,6 +90,15 @@ object Nats {
         case _ => ""
       }
       write(s"""CONNECT {"verbose":false,"pedantic":false,"tls_required":false,"name":"graft","lang":"scala","version":"0"$auth}\r\n""")
+      ping()
+    }
+
+    /** PING/PONG round trip: returns once the server has processed
+      * everything this connection sent before it (a publish is
+      * fire-and-forget; a reader on another connection may rely on it
+      * only after this).
+      */
+    def ping(): Unit = {
       write("PING\r\n")
       flush()
       awaitPong(connectTimeoutMs)
@@ -193,7 +202,7 @@ object Nats {
         require(System.nanoTime() < deadline, "nats: no PONG from server")
         readFrame(timeoutMs) match {
           case Some(PongFrame) => got = true
-          case Some(ErrFrame(e)) => sys.error(s"nats: connect failed: $e")
+          case Some(ErrFrame(e)) => sys.error(s"nats: server error: $e")
           case _ => ()
         }
       }

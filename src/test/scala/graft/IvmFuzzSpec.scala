@@ -103,23 +103,44 @@ class IvmFuzzSpec extends SparkSpec {
     val sql = ("CREATE TABLE t (k BIGINT NOT NULL, g BIGINT, v BIGINT);" +
       "CREATE TABLE d (g BIGINT NOT NULL, name VARCHAR);" +
       views.mkString(" ")).stripMargin
-    val pipe = Pipeline(spark, sql)
     val r = rows(300).localCheckpoint(true)
     val dm = dims(25).localCheckpoint(true)
-    // step 1: partial inserts on both tables
-    pipe.step(Map(
-      "t" -> ZSets.lift(r.filter(col("k") % 3 =!= 0)),
-      "d" -> ZSets.lift(dm.filter(col("g") < 20))))
-    // step 2: the rest, plus retractions of step-1 rows
-    pipe.step(Map(
-      "t" -> ZSets.lift(r.filter(col("k") % 3 === 0)).unionByName(
-        ZSets.negate(ZSets.lift(r.filter(col("k") % 7 === 0)))),
-      "d" -> ZSets.lift(dm.filter(col("g") >= 20))))
-    // step 3: dim retraction + a final insert wave touching every view
-    pipe.step(Map(
-      "t" -> ZSets.lift(r.filter(col("k") % 7 === 0)
-        .withColumn("v", col("v") + 1)),
-      "d" -> ZSets.negate(ZSets.lift(dm.filter(col("g") % 11 === 5)))))
+    val steps = Seq(
+      // step 1: partial inserts on both tables
+      Map(
+        "t" -> ZSets.lift(r.filter(col("k") % 3 =!= 0)),
+        "d" -> ZSets.lift(dm.filter(col("g") < 20))),
+      // step 2: the rest, plus retractions of step-1 rows
+      Map(
+        "t" -> ZSets.lift(r.filter(col("k") % 3 === 0)).unionByName(
+          ZSets.negate(ZSets.lift(r.filter(col("k") % 7 === 0)))),
+        "d" -> ZSets.lift(dm.filter(col("g") >= 20))),
+      // step 3: dim retraction + a final insert wave touching every view
+      Map(
+        "t" -> ZSets.lift(r.filter(col("k") % 7 === 0)
+          .withColumn("v", col("v") + 1)),
+        "d" -> ZSets.negate(ZSets.lift(dm.filter(col("g") % 11 === 5)))))
+    val pipe = Pipeline(spark, sql)
+    val serialOut = steps.map(pipe.step)
+    // the same steps through the concurrent step loop (local[4] resolves
+    // viewParallelism to 1): every view reads only tables, so the whole
+    // corpus is one level fanned out 8 wide
+    val parSession = spark.newSession()
+    parSession.conf.set("spark.graft.pipeline.viewParallelism", "8")
+    val parallel = Pipeline(parSession, sql)
+    val parallelOut = steps.map(parallel.step)
+    def sameMultiset(a: DataFrame, b: DataFrame): Boolean = {
+      val (ca, cb) = (ZSets.consolidate(a), ZSets.consolidate(b))
+      val cbo = cb.select(ca.columns.map(col): _*)
+      ca.exceptAll(cbo).isEmpty && cbo.exceptAll(ca).isEmpty
+    }
+    serialOut.zip(parallelOut).zipWithIndex.foreach { case ((sd, pd), i) =>
+      assert(pd.keySet === sd.keySet)
+      for ((v, d) <- sd)
+        assert(sameMultiset(d, pd(v)),
+          s"step ${i + 1}: parallel delta of $v diverged from serial; " +
+            s"definition: ${views(v.stripPrefix("fz").toInt)}")
+    }
 
     val batchT = r.filter(col("k") % 7 =!= 0).unionByName(
       r.filter(col("k") % 7 === 0).withColumn("v", col("v") + 1))

@@ -49,6 +49,9 @@ class NatsSpec extends SparkSpec {
       pub.publish("events.b", """{"insert": {"k": 2, "v": 7}}""".getBytes(UTF_8))
 
       val p = Pipeline(spark, programSql(srv.url, "EVENTS"))
+      // publishes are fire-and-forget: the round trip orders them before
+      // the pull, which runs on the connector's own connection
+      pub.ping()
       p.ingestConnectors()
       assert(p.adHoc("SELECT * FROM totals").as[(Long, Long, Long)].collect().toSet ===
         Set((1L, 15L, 2L), (2L, 7L, 1L)))
@@ -56,11 +59,13 @@ class NatsSpec extends SparkSpec {
       // next round: only the NEW messages (incl. a retraction)
       pub.publish("events.a", """{"delete": {"k": 1, "v": 5}}""".getBytes(UTF_8))
       pub.publish("events.b", """{"insert": {"k": 2, "v": 3}}""".getBytes(UTF_8))
+      pub.ping()
       p.ingestConnectors()
       assert(p.adHoc("SELECT * FROM totals").as[(Long, Long, Long)].collect().toSet ===
         Set((1L, 10L, 1L), (2L, 10L, 2L)))
 
       // idle round: a no-op, and the cursor does not move
+      pub.ping()
       p.ingestConnectors()
       assert(p.adHoc("SELECT * FROM totals").as[(Long, Long, Long)].collect().toSet ===
         Set((1L, 10L, 1L), (2L, 10L, 2L)))

@@ -32,6 +32,9 @@ class PipelineSemiAntiSpec extends SparkSpec {
       |CREATE VIEW inq AS
       |  SELECT o_id FROM orders
       |  WHERE o_cust IN (SELECT c_id FROM customer WHERE c_id % 2 = 0);
+      |CREATE VIEW inqdiv AS
+      |  SELECT o_id, o_cust / 4 AS q FROM orders
+      |  WHERE o_cust IN (SELECT c_id FROM customer WHERE c_id % 2 = 0);
       |CREATE VIEW notin AS
       |  SELECT o_id FROM orders
       |  WHERE o_cust NOT IN (SELECT c_id FROM customer);""".stripMargin
@@ -55,6 +58,9 @@ class PipelineSemiAntiSpec extends SparkSpec {
       === Ivm.SemiAnti(Set("orders"), Set("customer"), isAnti = true))
     assert(pipe.shapeOf("inq")
       === Ivm.SemiAnti(Set("orders"), Set("customer"), isAnti = false))
+    // integral `/` is integer division in the maintained view too
+    assert(pipe.shapeOf("inqdiv")
+      === Ivm.SemiAnti(Set("orders"), Set("customer"), isAnti = false))
     // NOT IN rewrites to a null-tolerant OR condition — not a pure equality
     // conjunction, so the indicator rule would be wrong; must fall back
     assert(pipe.shapeOf("notin") === Ivm.Opaque)
@@ -76,7 +82,7 @@ class PipelineSemiAntiSpec extends SparkSpec {
     val batch = Pipeline(spark, programSql).runBatch(Map(
       "orders" -> o.filter(col("o_id") % 7 =!= 0),
       "customer" -> c.filter(col("c_id") % 11 =!= 3)))
-    for (v <- Seq("sem", "ex", "ant", "inq", "notin")) {
+    for (v <- Seq("sem", "ex", "ant", "inq", "inqdiv", "notin")) {
       val inc = pipe.adHoc(s"SELECT * FROM $v")
       val exp = batch(v)
       assert(inc.exceptAll(exp).isEmpty && exp.exceptAll(inc).isEmpty,

@@ -340,6 +340,26 @@ class PipelineSpec extends SparkSpec {
     assert(errs.head._1 === "parsed" && errs.head._2.contains("65"))
   }
 
+  test("emit_final waits only on tables the view reads, not on names " +
+      "inside string literals") {
+    // `kind <> 'u'` spells table u only inside a literal; u never
+    // receives data, so counting it as an input would hold every group
+    val pipe = Pipeline(spark,
+      """CREATE TABLE t (ts INT NOT NULL LATENESS 2, kind VARCHAR);
+        |CREATE TABLE u (ts INT NOT NULL LATENESS 2);
+        |CREATE VIEW v WITH ('emit_final' = 'ts') AS
+        |  SELECT ts, COUNT(*) AS n FROM t WHERE kind <> 'u' GROUP BY ts;
+        |""".stripMargin)
+    def ins(ts: Int*): org.apache.spark.sql.DataFrame =
+      pipe.step(Map("t" -> ZSets.lift(
+        ts.map(i => (i, "a")).toDF("ts", "kind"))))("v")
+    assert(ins(0, 1).isEmpty)
+    assert(ins(1, 2).isEmpty)
+    // waterline 5 - 2 = 3: groups 0, 1 and 2 are final
+    assert(ins(4, 5).as[(Int, Long, Long)].collect().toSet ===
+      Set((0, 1L, 1L), (1, 2L, 1L), (2, 1L, 1L)))
+  }
+
   test("append_only tables reject deletions at the door") {
     val pipe = Pipeline(spark,
       """CREATE TABLE log (k BIGINT, v BIGINT)
