@@ -131,56 +131,14 @@ object Ddl {
   private val setOptionRe: Regex =
     """(?is)SET\s+(\w+)\s*=\s*(.+)$""".r
 
-  /** Split a program text into statements on top-level semicolons.
-    * Quote-aware: `''` inside a quoted string is an escaped quote, not a
-    * string boundary. Comments are stripped FIRST
+  /** Split a program text into statements on top-level semicolons
+    * outside quoted spans. Comments are stripped FIRST
     * ([[Dialect.stripComments]]) so a semicolon, quote, or keyword
     * inside a comment never derails the split or a later rewriter.
     */
-  private[graft] def statements(program0: String): Seq[String] = {
-    val program = Dialect.stripComments(program0)
-    val out = mutable.Buffer[String]()
-    val sb = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < program.length) {
-      val c = program.charAt(i)
-      c match {
-        case '\'' if inQuote && i + 1 < program.length
-            && program.charAt(i + 1) == '\'' =>
-          sb += '\''; sb += '\''; i += 1 // escaped quote, stay in-string
-        case '\'' => inQuote = !inQuote; sb += '\''
-        case '(' if !inQuote => depth += 1; sb += '('
-        case ')' if !inQuote => depth -= 1; sb += ')'
-        case ';' if !inQuote && depth == 0 =>
-          if (sb.toString.trim.nonEmpty) out += sb.toString.trim
-          sb.clear()
-        case ch => sb += ch
-      }
-      i += 1
-    }
-    if (sb.toString.trim.nonEmpty) out += sb.toString.trim
-    out.toSeq
-  }
-
-  /** Split column list on top-level commas. */
-  private def splitColumns(s: String): Seq[String] = {
-    val out = mutable.Buffer[String]()
-    val sb = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case '(' => depth += 1; sb += '('
-      case ')' => depth -= 1; sb += ')'
-      case '<' => depth += 1; sb += '<'
-      case '>' => depth -= 1; sb += '>'
-      case ',' if depth == 0 =>
-        out += sb.toString.trim; sb.clear()
-      case c => sb += c
-    }
-    if (sb.toString.trim.nonEmpty) out += sb.toString.trim
-    out.toSeq
-  }
+  private[graft] def statements(program0: String): Seq[String] =
+    Dialect.splitTopLevel(Dialect.stripComments(program0), ';')
+      .map(_.trim).filter(_.nonEmpty)
 
   def parseColumn(s: String): ColumnDef = s.trim match {
     case colRe(name, tpe, _, default, notNull, pk, _, _, lateness,
@@ -201,28 +159,32 @@ object Ddl {
       throw new IllegalArgumentException(s"cannot parse column: $other")
   }
 
-  /** Split on a separator at depth 0 outside quotes (`''` = escaped). */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
+  /** Split a column, type or property list on `sep` at depth 0 outside
+    * quoted spans ([[Dialect.quotedEnd]]); a blank last piece is
+    * dropped. Unlike [[Dialect.splitTopLevel]], `<…>` nests here: type
+    * lists spell `ARRAY<T>`/`MAP<K, V>`, while SQL expressions use `<`
+    * as an operator.
+    */
+  private[graft] def splitTop(s: String, sep: Char): Seq[String] = {
     val out = mutable.Buffer[String]()
-    val sb = new StringBuilder
     var depth = 0
-    var inQuote = false
+    var start = 0
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '\'' if inQuote && i + 1 < s.length && s.charAt(i + 1) == '\'' =>
-          sb += '\''; sb += '\''; i += 1
-        case '\'' => inQuote = !inQuote; sb += '\''
-        case '(' | '<' if !inQuote => depth += 1; sb += c
-        case ')' | '>' if !inQuote => depth -= 1; sb += c
-        case `sep` if !inQuote && depth == 0 =>
-          out += sb.toString; sb.clear()
-        case ch => sb += ch
+      val e = Dialect.quotedEnd(s, i)
+      if (e > i) i = e
+      else {
+        s.charAt(i) match {
+          case '(' | '<' => depth += 1
+          case ')' | '>' => depth -= 1
+          case `sep` if depth == 0 =>
+            out += s.substring(start, i); start = i + 1
+          case _ => ()
+        }
+        i += 1
       }
-      i += 1
     }
-    out += sb.toString
+    if (s.substring(start).trim.nonEmpty) out += s.substring(start)
     out.toSeq
   }
 
@@ -287,9 +249,9 @@ object Ddl {
           column.toLowerCase, interval.trim)
       case recRe(name, cols) =>
         recursive += RecursiveDecl(name.toLowerCase,
-          splitColumns(cols).map(parseColumn))
+          splitTop(cols, ',').map(parseColumn))
       case tableRe(name, cols, props) =>
-        val (pkClauses, colDefs) = splitColumns(cols)
+        val (pkClauses, colDefs) = splitTop(cols, ',').map(_.trim)
           .partition(_.toUpperCase.startsWith("PRIMARY KEY"))
         // table-level PRIMARY KEY (a, b) marks the named columns, same as
         // the inline form (grammar.md's table constraint)
@@ -325,7 +287,7 @@ object Ddl {
           k, parseProps(props))
       case indexRe(name, view, cols) =>
         indexes += IndexDef(name.toLowerCase, view.toLowerCase,
-          splitColumns(cols).map(_.trim.toLowerCase).filter(_.nonEmpty))
+          splitTop(cols, ',').map(_.trim.toLowerCase).filter(_.nonEmpty))
       case funcRe(name, params, ret, body) =>
         functions += FunctionDef(name.toLowerCase, params.trim, ret.trim,
           Option(body).map(_.trim))

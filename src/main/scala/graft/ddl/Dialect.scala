@@ -1,23 +1,29 @@
 package graft.ddl
 
-/** Reference-dialect spellings that Spark parses differently — applied to
-  * VIEW bodies and ad-hoc statements before they reach Catalyst
-  * (docs.feldera.com/docs/sql/grammar.md:403-444 `SELECT * EXCLUDE`,
-  * :482-497 UNPIVOT). The rewrite is strictly a spelling map onto Spark's
-  * own surface:
+/** The reference dialect (Calcite's grammar plus Feldera's extensions,
+  * docs.feldera.com/docs/sql/grammar.md) rewritten into SQL that Spark
+  * parses with the reference's meaning — applied to VIEW bodies and
+  * ad-hoc statements before they reach Catalyst. [[normalize]] runs a
+  * fixed chain of text rewrites:
   *
-  *  - `SELECT * EXCLUDE (a, b)` → Spark's `SELECT * EXCEPT (a, b)`
-  *    (the reference treats EXCEPT/EXCLUDE as synonyms after `*`; Spark
-  *    only spells EXCEPT). Anchored to a preceding `*` so a function or
-  *    column named `exclude` is untouched.
-  *  - `UNPIVOT INCLUDING NULLS` / `EXCLUDING NULLS` → Spark's
-  *    `UNPIVOT INCLUDE NULLS` / `EXCLUDE NULLS` (same semantics, Calcite
-  *    vs Spark participle).
+  *  - lexical: comments stripped, `U&'…'` literals decoded, `"…"`
+  *    identifiers mapped to Spark backticks, literal backslashes
+  *    escaped, optimizer hints mapped;
+  *  - spellings Spark lacks or spells differently (`* EXCLUDE`, ROW,
+  *    APPLY, FETCH/OFFSET, ARRAY[…]/MAP[…], x[i] subscripts, SAFE_CAST,
+  *    interval idioms, unsigned types, …);
+  *  - functions whose reference semantics differ from Spark's natives
+  *    (SUBSTRING FROM/FOR, EXTRACT units, FLOOR/CEIL TO, DATE_TRUNC,
+  *    CHAR(n)/BINARY(n) casts, LOG/LN/EXP, GREATEST/LEAST, …), lowered
+  *    onto graft_* functions or explicit expressions;
+  *  - clauses Spark has no surface for (QUALIFY, DISTINCT ON, ASOF JOIN,
+  *    PIVOT/UNPIVOT, windowing TVFs, period predicates, row-valued
+  *    CASE/IN, GROUPING on plain GROUP BY), lowered to equivalent
+  *    subqueries.
   *
-  * Everything else in the grammar (PIVOT, the UNPIVOT measure/axis/IN
-  * body, multi-column unpivot values) is spelled identically by both
-  * engines and passes through verbatim. String literals are copied
-  * through untouched.
+  * Every rewrite is quote-aware through one primitive, [[quotedEnd]],
+  * the sole owner of the quoting rules: text inside a string literal or
+  * a quoted identifier is never rewritten and never read as structure.
   */
 object Dialect {
 
@@ -233,15 +239,9 @@ object Dialect {
     * end of the rewrite pipeline makes Spark read them verbatim while
     * leaving '' doubling (which Spark also honors) untouched.
     */
-  private[graft] def escapeLiteralBackslashes(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var inQ = false
-    for (c <- s) {
-      if (c == '\'') inQ = !inQ
-      if (c == '\\' && inQ) out ++= "\\\\" else out += c
-    }
-    out.toString
-  }
+  private[graft] def escapeLiteralBackslashes(s: String): String =
+    mapRuns(s)((t, quoted) =>
+      if (quoted && t.startsWith("'")) t.replace("\\", "\\\\") else t)
 
   /** `U&'...' [UESCAPE 'c']` Unicode string literals (string.md:59-70):
     * escape char + 4 hex digits denote a code point, a doubled escape
@@ -285,38 +285,14 @@ object Dialect {
     * left alone.
     */
   private def rewriteSubstringFromFor(s: String): String = {
-    val re = """(?i)\bSUBSTRING\s*\(""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      // top-level scan of the argument list for FROM / FOR keywords
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var fromAt = -1
-      var forAt = -1
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case 'F' | 'f' if depth == 1 =>
-            val up = acc.substring(i, math.min(i + 5, acc.length))
-              .toUpperCase
-            def kw(w: String): Boolean =
-              up.startsWith(w) && i > 0 &&
-                !Character.isLetterOrDigit(acc.charAt(i - 1)) &&
-                i + w.length < acc.length &&
-                !Character.isLetterOrDigit(acc.charAt(i + w.length))
-            if (kw("FROM") && fromAt < 0) fromAt = i
-            else if (kw("FOR") && forAt < 0 && fromAt >= 0) forAt = i
-          case _ =>
-        }
-        i += 1
-      }
+    foldUnquoted(s, """(?i)\bSUBSTRING\s*\(""".r) { (acc, m) =>
+      // top-level FROM / FOR keywords of the argument list
+      val close = balancedClose(acc, m.end - 1)
+      val args = if (close < 0) "" else acc.substring(m.end, close)
+      val fromAt =
+        topLevelKeyword(args, "FROM").headOption.fold(-1)(_ + m.end)
+      val forAt = topLevelKeyword(args, "FOR").map(_ + m.end)
+        .find(fromAt >= 0 && _ > fromAt).getOrElse(-1)
       if (close < 0 || fromAt < 0 || forAt < 0) acc
       else {
         val x = acc.substring(m.end, fromAt).trim
@@ -346,9 +322,7 @@ object Dialect {
     */
   private def rewriteExtract(s: String): String = {
     val re = """(?i)\bEXTRACT\s*\(\s*(\w+)\s+FROM\b""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
+    foldUnquoted(s, re) { (acc, m) =>
       val unit = m.group(1).toUpperCase.stripPrefix("SQL_TSI_")
       val mapped = Set("EPOCH", "CENTURY", "MILLENNIUM", "DECADE",
         "DOW", "ISODOW", "ISOYEAR", "MICROSECOND", "MILLISECOND",
@@ -356,21 +330,7 @@ object Dialect {
       if (!mapped(unit) && !m.group(1).toUpperCase.startsWith("SQL_TSI_"))
         acc
       else {
-        var depth = 1
-        var i = m.end
-        var inQ = false
-        var close = -1
-        while (close < 0 && i < acc.length) {
-          val c = acc.charAt(i)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
+        val close = balancedClose(acc, m.start + m.matched.indexOf('('))
         if (close < 0) acc
         else {
           val x = acc.substring(m.end, close).trim
@@ -413,24 +373,9 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val m = """(?i)\b(ARRAY|MAP)\s*\[""".r.findFirstMatchIn(s)
-        .filter(mm => !inQuoteMap(s)(mm.start))
-      m.foreach { mm =>
-        var depth = 1
-        var i = mm.end
-        var inQ = false
-        var close = -1
-        while (close < 0 && i < s.length) {
-          val c = s.charAt(i)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '[' => depth += 1
-            case ']' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
+      val arrayOpen = """(?i)\b(ARRAY|MAP)\s*\[""".r
+      unquotedMatches(s, arrayOpen).nextOption().foreach { mm =>
+        val close = balancedClose(s, mm.end - 1)
         if (close >= 0) {
           // `MAP[k1, v1, …]` is Calcite's map constructor → map(...)
           s = s.substring(0, mm.start) +
@@ -470,28 +415,10 @@ object Dialect {
     */
   private def dispatchArity(s: String, name: String, commas: Int,
       target: String): String = {
-    val re = ("""(?i)\b""" + name + """\s*\(""").r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var n = 0
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case ',' if depth == 1 => n += 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (close < 0 || n != commas) acc
+    foldUnquoted(s, ("""(?i)\b""" + name + """\s*\(""").r) { (acc, m) =>
+      val close = balancedClose(acc, m.end - 1)
+      if (close < 0 ||
+        splitTopLevel(acc.substring(m.end, close)).size - 1 != commas) acc
       else acc.substring(0, m.start) + target + "(" +
         acc.substring(m.end)
     }
@@ -502,28 +429,10 @@ object Dialect {
     * gains the explicit scale.
     */
   private def rewriteTruncate1(s: String): String = {
-    val re = """(?i)\bTRUNCATE\s*\(""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var commas = 0
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case ',' if depth == 1 => commas += 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (close < 0 || commas > 0) acc
+    foldUnquoted(s, """(?i)\bTRUNCATE\s*\(""".r) { (acc, m) =>
+      val close = balancedClose(acc, m.end - 1)
+      if (close < 0 || splitTopLevel(acc.substring(m.end, close)).size > 1)
+        acc
       else acc.substring(0, close) + ", 0" + acc.substring(close)
     }
   }
@@ -535,24 +444,8 @@ object Dialect {
     */
   private def rewriteDatePart(s: String): String = {
     val re = """(?i)\bDATE_PART\s*\(\s*([A-Za-z_]+)\s*,""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
+    foldUnquoted(s, re) { (acc, m) =>
+      val close = balancedClose(acc, m.start + m.matched.indexOf('('))
       if (close < 0) acc
       else acc.substring(0, m.start) +
         s"EXTRACT(${m.group(1).toUpperCase} FROM " +
@@ -565,31 +458,10 @@ object Dialect {
     * [[org.apache.spark.sql.graft.GraftDateTrunc]].
     */
   private def rewriteFloorCeilTo(s: String): String = {
-    val re = """(?i)\b(FLOOR|CEIL|CEILING)\s*\(""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var toAt = -1
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case 'T' | 't' if depth == 1 =>
-            if (acc.regionMatches(true, i, "TO", 0, 2) && i > 0 &&
-              Character.isWhitespace(acc.charAt(i - 1)) &&
-              i + 2 < acc.length &&
-              Character.isWhitespace(acc.charAt(i + 2))) toAt = i
-          case _ =>
-        }
-        i += 1
-      }
+    foldUnquoted(s, """(?i)\b(FLOOR|CEIL|CEILING)\s*\(""".r) { (acc, m) =>
+      val close = balancedClose(acc, m.end - 1)
+      val toAt = if (close < 0) -1 else topLevelKeyword(
+        acc.substring(m.end, close), "TO").lastOption.fold(-1)(_ + m.end)
       if (close < 0 || toAt < 0) acc
       else {
         val unit = acc.substring(toAt + 2, close).trim
@@ -616,25 +488,12 @@ object Dialect {
     */
   private def rewriteDateTrunc(s: String): String = {
     val re = """(?i)\b(?:DATE|TIMESTAMP|TIME)_TRUNC\s*\(""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var commaAt = -1
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case ',' if depth == 1 => commaAt = i // last top-level comma
-          case _ =>
-        }
-        i += 1
+    foldUnquoted(s, re) { (acc, m) =>
+      val close = balancedClose(acc, m.end - 1)
+      // the last top-level comma
+      val commaAt = if (close < 0) -1 else {
+        val args = splitTopLevel(acc.substring(m.end, close))
+        if (args.size < 2) -1 else close - args.last.length - 1
       }
       if (close < 0 || commaAt < 0) acc
       else {
@@ -672,31 +531,8 @@ object Dialect {
       java.util.regex.Matcher.quoteReplacement(
         s"rpad(substring(CAST(${m.group(1)} AS STRING), 1, $n), $n, ' ')")
     })
-    val re = """(?i)\bCAST\s*\(""".r
-    re.findAllMatchIn(s1).toSeq
-      .filter(mm => !inQuoteMap(s1)(mm.start))
-      .reverse.foldLeft(s1) { (acc, m) =>
-      var depth = 1
-      var i = m.end
-      var inQ = false
-      var asAt = -1
-      var close = -1
-      while (close < 0 && i < acc.length) {
-        val c = acc.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case 'A' | 'a' if depth == 1 =>
-            if (acc.regionMatches(true, i, "AS", 0, 2) && i > 0 &&
-              !Character.isLetterOrDigit(acc.charAt(i - 1)) &&
-              i + 2 < acc.length &&
-              !Character.isLetterOrDigit(acc.charAt(i + 2))) asAt = i
-          case _ =>
-        }
-        i += 1
-      }
+    foldUnquoted(s1, """(?i)\bCAST\s*\(""".r) { (acc, m) =>
+      val (close, asAt) = castParts(acc, m)
       val charN = """(?i)^CHAR(?:ACTER)?\s*\(\s*(\d+)\s*\)$""".r
       if (close < 0 || asAt < 0) acc
       else acc.substring(asAt + 2, close).trim match {
@@ -708,6 +544,17 @@ object Dialect {
         case _ => acc
       }
     }
+  }
+
+  /** (index of the close paren, start of the last top-level AS) of the
+    * `CAST(` call matched by `m`; -1 for a part that is missing.
+    */
+  private def castParts(s: String,
+      m: scala.util.matching.Regex.Match): (Int, Int) = {
+    val close = balancedClose(s, m.end - 1)
+    val as =
+      if (close < 0) -1 else lastTopLevelAsIdx(s.substring(m.end, close))
+    (close, if (as < 0) -1 else as + m.end)
   }
 
   /** TIME literals in TIMESTAMP contexts — `CAST(TIME '…' AS
@@ -779,7 +626,7 @@ object Dialect {
     var found = true
     while (found) {
       found = false
-      re.findAllMatchIn(s).find(m => !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, re).nextOption() match {
         case Some(m) =>
           val close = balancedClose(s, m.end - 1)
           if (close > 0) {
@@ -822,17 +669,7 @@ object Dialect {
     var e = pos - 1
     while (e >= 0 && s.charAt(e).isWhitespace) e -= 1
     if (e >= 0 && s.charAt(e) == ')') {
-      var d = 0
-      var b = e
-      var open = -1
-      while (open < 0 && b >= 0) {
-        s.charAt(b) match {
-          case ')' => d += 1
-          case '(' => d -= 1; if (d == 0) open = b
-          case _ =>
-        }
-        b -= 1
-      }
+      val open = balancedOpen(s, e)
       (open, s.substring(open, e + 1))
     } else {
       var b = e
@@ -857,8 +694,7 @@ object Dialect {
     var guard = 0
     while (guard < 200) {
       guard += 1
-      re.findAllMatchIn(s)
-        .find(m => m.start >= search && !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, re).find(_.start >= search) match {
         case None => return s
         case Some(m) =>
           val include = Option(m.group(1))
@@ -866,22 +702,16 @@ object Dialect {
           val close = balancedClose(s, m.end - 1)
           require(close > 0, s"unbalanced UNPIVOT in: $s")
           val body = s.substring(m.end, close)
-          val forM = """(?i)\bFOR\b""".r.findAllMatchIn(body).find { fm =>
-            var d = 0
-            body.take(fm.start).foreach {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ =>
-            }
-            d == 0
-          }.getOrElse(sys.error(s"UNPIVOT without FOR: $body"))
-          val measText = body.take(forM.start).trim
+          val forAt = topLevelKeyword(body, "FOR").headOption
+            .getOrElse(sys.error(s"UNPIVOT without FOR: $body"))
+          val forEnd = forAt + "FOR".length
+          val measText = body.take(forAt).trim
           val measures =
             if (measText.startsWith("("))
               splitTopLevel(measText.stripPrefix("(").stripSuffix(")"))
                 .map(_.trim)
             else Seq(measText)
-          val tail = body.drop(forM.end).trim
+          val tail = body.drop(forEnd).trim
           val inM = """(?i)\bIN\s*\(""".r.findFirstMatchIn(tail)
             .getOrElse(sys.error(s"UNPIVOT FOR without IN: $body"))
           val keyText = tail.take(inM.start).trim
@@ -907,7 +737,7 @@ object Dialect {
                 case other => other
               }
             }
-            val newBody = body.take(forM.end) + " " +
+            val newBody = body.take(forEnd) + " " +
               tail.take(inM.end) + lowered.mkString(", ") +
               tail.substring(inClose)
             s = s.substring(0, m.end) + newBody + s.substring(close)
@@ -964,35 +794,6 @@ object Dialect {
     s
   }
 
-  /** Index of the `)` closing the `(` at position `open` (quote-aware). */
-  private def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var inQ = false
-    var j = open
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return j
-        case _ => ()
-      }
-      j += 1
-    }
-    -1
-  }
-
-  private def replaceGuarded(s: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => String): String =
-    re.findAllMatchIn(s).toSeq
-      .filter(m => !inQuoteMap(s)(m.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-        acc.substring(0, m.start) + f(m) + acc.substring(m.end)
-      }
-
   private def rewriteCalciteLiterals(s0: String): String = {
     var s = s0
     s = replaceGuarded(s,
@@ -1041,48 +842,18 @@ object Dialect {
     while (guard < 500) {
       guard += 1
       // a '[' directly after an identifier, ')' or ']' is a subscript
-      var open = -1
-      var j = search
-      while (open < 0 && j < s.length) {
-        if (s.charAt(j) == '[' && !inQuoteMap(s)(j) && j > 0 &&
+      val open = scanTop(s) { (j, _) =>
+        j >= search && s.charAt(j) == '[' && j > 0 &&
           (s.charAt(j - 1).isLetterOrDigit || s.charAt(j - 1) == '_' ||
-            s.charAt(j - 1) == ')' || s.charAt(j - 1) == '`'))
-          open = j
-        j += 1
+            s.charAt(j - 1) == ')' || s.charAt(j - 1) == '`')
       }
       if (open < 0) return s
-      // balanced close over nested brackets/parens
-      var depth = 0
-      var inQ = false
-      var close = -1
-      j = open
-      while (close < 0 && j < s.length) {
-        val c = s.charAt(j)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '[' => depth += 1
-          case ']' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
+      val close = balancedClose(s, open)
       if (close < 0) return s
       // the primary expression before '[': balanced parens (call or
       // group), then a dotted identifier chain
       var b = open - 1
-      if (s.charAt(b) == ')') {
-        var d = 0
-        var o2 = -1
-        while (o2 < 0 && b >= 0) {
-          s.charAt(b) match {
-            case ')' => d += 1
-            case '(' => d -= 1; if (d == 0) o2 = b
-            case _ =>
-          }
-          b -= 1
-        }
-      }
+      if (s.charAt(b) == ')') b = math.max(balancedOpen(s, b), 0) - 1
       while (b >= 0 && (s.charAt(b).isLetterOrDigit ||
         s.charAt(b) == '_' || s.charAt(b) == '.' || s.charAt(b) == '`'))
         b -= 1
@@ -1110,7 +881,7 @@ object Dialect {
     var guard = 0
     while (guard < 100) {
       guard += 1
-      re.findAllMatchIn(s).find(m => !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, re).nextOption() match {
         case None => return s
         case Some(m) =>
           // the '(' right after LATERAL
@@ -1145,8 +916,8 @@ object Dialect {
     var guard = 0
     while (guard < 100) {
       guard += 1
-      """(?i)\bCASE\s*\(""".r.findAllMatchIn(s)
-        .find(m => m.start >= search && !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, """(?i)\bCASE\s*\(""".r)
+        .find(_.start >= search) match {
         case None => return s
         case Some(m) =>
           val open = s.indexOf('(', m.start)
@@ -1183,32 +954,20 @@ object Dialect {
                   .findPrefixMatchOf(s.substring(pos)).getOrElse(
                     sys.error("row-CASE WHEN without THEN"))
                 val bodyStart = pos + tm.end
-                val stop = """(?is)\b(WHEN|ELSE|END)\b""".r
-                  .findAllMatchIn(s).find(x =>
-                    x.start >= bodyStart && {
-                      var d = 0
-                      s.substring(bodyStart, x.start).foreach {
-                        case '(' => d += 1
-                        case ')' => d -= 1
-                        case _ =>
-                      }
-                      d == 0
-                    }).getOrElse(sys.error("row-CASE without END"))
+                val stop = unquotedMatches(s,
+                  """(?is)\b(WHEN|ELSE|END)\b""".r).find(x =>
+                    x.start >= bodyStart &&
+                      depthAt(s.substring(bodyStart), x.start - bodyStart) == 0)
+                  .getOrElse(sys.error("row-CASE without END"))
                 sb ++= " THEN" + s.substring(bodyStart, stop.start)
                 pos = stop.start
               }
             }
             // remainder (ELSE … END or END) copies verbatim up to END
-            val endM = """(?is)\bEND\b""".r.findAllMatchIn(s)
-              .find(x => x.start >= pos && {
-                var d = 0
-                s.substring(pos, x.start).foreach {
-                  case '(' => d += 1
-                  case ')' => d -= 1
-                  case _ =>
-                }
-                d == 0
-              }).getOrElse(sys.error("row-CASE without END"))
+            val endM = unquotedMatches(s, """(?is)\bEND\b""".r)
+              .find(x => x.start >= pos &&
+                depthAt(s.substring(pos), x.start - pos) == 0)
+              .getOrElse(sys.error("row-CASE without END"))
             sb ++= " " + s.substring(pos, endM.end).trim
             s = s.substring(0, m.start) + sb.toString +
               s.substring(endM.end)
@@ -1233,8 +992,7 @@ object Dialect {
     var guard = 0
     while (guard < 200) {
       guard += 1
-      re.findAllMatchIn(s)
-        .find(m => m.start >= search && !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, re).find(_.start >= search) match {
         case None => return s
         case Some(m) =>
           val close = balancedClose(s, m.end - 1)
@@ -1274,27 +1032,15 @@ object Dialect {
     var found = true
     while (found) {
       found = false
-      """(?i)\bPIVOT\s*\(""".r.findAllMatchIn(s)
-        .find(m => !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, """(?i)\bPIVOT\s*\(""".r).nextOption() match {
         case None => return s
         case Some(m) =>
           val close = balancedClose(s, m.end - 1)
           require(close > 0, s"unbalanced PIVOT in: $s")
           val body = s.substring(m.end, close)
           // split at the top-level FOR
-          val forM = """(?i)\bFOR\b""".r.findAllMatchIn(body).find { fm =>
-            var d = 0; var inQ = false
-            body.take(fm.start).foreach { c =>
-              if (inQ) { if (c == '\'') inQ = false }
-              else c match {
-                case '\'' => inQ = true
-                case '(' => d += 1
-                case ')' => d -= 1
-                case _ =>
-              }
-            }
-            d == 0 && !inQ
-          }.getOrElse(sys.error(s"PIVOT without FOR: $body"))
+          val forAt = topLevelKeyword(body, "FOR").headOption
+            .getOrElse(sys.error(s"PIVOT without FOR: $body"))
           // aggregate list: (expr, alias?) — Calcite's output names are
           // REFERENCEABLE (`SELECT "10_COUNT" FROM … PIVOT (COUNT(*)
           // AS "COUNT" …)`), so aliases must be preserved exactly
@@ -1321,9 +1067,9 @@ object Dialect {
               case _ => (x.trim, None)
             }
           }
-          val aggs = splitTopLevel(body.take(forM.start))
+          val aggs = splitTopLevel(body.take(forAt))
             .map(_.trim).filter(_.nonEmpty).map(unalias)
-          val tail = body.drop(forM.end).trim
+          val tail = body.drop(forAt + "FOR".length).trim
           val inM = """(?i)\bIN\s*\(""".r.findFirstMatchIn(tail)
             .getOrElse(sys.error(s"PIVOT FOR without IN: $body"))
           val pivotColText = tail.take(inM.start).trim
@@ -1392,21 +1138,8 @@ object Dialect {
     */
   private def rewriteArrayAggOrder(s0: String): String = {
     def topOrderBy(body: String): Option[(String, String, Boolean)] = {
-      val re = """(?i)\bORDER\s+BY\b""".r
-      re.findAllMatchIn(body).find { m =>
-        var depth = 0
-        var inQ = false
-        body.take(m.start).foreach { c =>
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-        }
-        depth == 0 && !inQ
-      }.map { m =>
+      unquotedMatches(body, """(?i)\bORDER\s+BY\b""".r)
+        .find(m => depthAt(body, m.start) == 0).map { m =>
         val e = body.take(m.start).trim
         var key = body.drop(m.end).trim
         val desc = """(?i)\s+DESC\s*$""".r.findFirstIn(key).isDefined
@@ -1419,12 +1152,10 @@ object Dialect {
     var found = true
     while (found) {
       found = false
-      """(?i)\bARRAY_AGG\s*\(""".r.findAllMatchIn(s)
+      unquotedMatches(s, """(?i)\bARRAY_AGG\s*\(""".r)
         .find { m =>
-          !inQuoteMap(s)(m.start) && {
-            val close = balancedClose(s, m.end - 1)
-            close > 0 && topOrderBy(s.substring(m.end, close)).isDefined
-          }
+          val close = balancedClose(s, m.end - 1)
+          close > 0 && topOrderBy(s.substring(m.end, close)).isDefined
         } match {
         case Some(m) =>
           val close = balancedClose(s, m.end - 1)
@@ -1465,43 +1196,21 @@ object Dialect {
     var guard = 0
     while (guard < 1000) {
       guard += 1
-      val qm = unitRe.findAllMatchIn(s)
-        .find(m => m.start >= search && !inQuoteMap(s)(m.start))
-      qm match {
+      unquotedMatches(s, unitRe).find(_.start >= search) match {
         case None => return s
         case Some(m) =>
-          // backtrack to the matching '('
-          var depth = 0
-          var open = -1
-          var j = m.start
-          while (open < 0 && j >= 0) {
-            s.charAt(j) match {
-              case ')' => depth += 1
-              case '(' => depth -= 1; if (depth == 0) open = j
-              case _ =>
-            }
-            j -= 1
-          }
+          val open = balancedOpen(s, m.start)
           val group = if (open >= 0) s.substring(open, m.start + 1) else ""
-          // last top-level binary '-' inside the group
-          val minusIdx: Int = if (open < 0) -1 else {
-            var d = 0; var inQ = false; var idx = -1
-            var prev = ' '
-            var k = 0
-            group.foreach { c =>
-              if (inQ) { if (c == '\'') inQ = false }
-              else c match {
-                case '\'' => inQ = true
-                case '(' => d += 1
-                case ')' => d -= 1
-                case '-' if d == 1 && !"(,+-*/<>=".contains(prev) =>
-                  idx = k
-                case _ =>
-              }
-              if (!c.isWhitespace) prev = c
-              k += 1
+          // last top-level binary '-' inside the group: one not
+          // following an operator or an opening paren/comma
+          var minusIdx = -1
+          if (open >= 0) scanTop(group) { (k, d) =>
+            if (d == 1 && group.charAt(k) == '-') {
+              val prev = group.lastIndexWhere(!_.isWhitespace, k - 1)
+              if (prev < 0 || !"(,+-*/<>=".contains(group.charAt(prev)))
+                minusIdx = k
             }
-            idx
+            false
           }
           if (minusIdx > 0) {
             val unit = m.group(1).toUpperCase
@@ -1535,8 +1244,8 @@ object Dialect {
     var found = true
     while (found) {
       found = false
-      """(?i)(,\s*|\bJOIN\s+)?\bUNNEST\s*\(""".r.findAllMatchIn(s)
-        .find(m => !inQuoteMap(s)(m.start)) match {
+      unquotedMatches(s, """(?i)(,\s*|\bJOIN\s+)?\bUNNEST\s*\(""".r)
+        .nextOption() match {
         case Some(m) =>
           val lateral = Option(m.group(1)).isDefined
           val open = m.end - 1
@@ -1593,40 +1302,21 @@ object Dialect {
     * else keeps the plain (Expand-free) aggregate plan.
     */
   private def rewriteGroupingSetsWrap(s: String): String = {
-    val usesGrouping = """(?i)\bGROUPING(_ID)?\s*\(""".r
-      .findFirstMatchIn(s).exists(m => !inQuoteMap(s)(m.start))
-    if (!usesGrouping) return s
-    val re = """(?i)\bGROUP\s+BY\b""".r
-    val enders = Seq("HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT",
+    if (!unquotedMatches(s, """(?i)\bGROUPING(_ID)?\s*\(""".r).hasNext)
+      return s
+    val enders = Set("HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT",
       "OFFSET", "FETCH", "UNION", "EXCEPT", "INTERSECT")
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-        // clause extent: scan at the clause's own depth until a
-        // closing paren below it, a top-level clause keyword, or ';'
-        var i = m.end
-        var depth = 0
-        var inQ = false
-        var end = -1
-        while (end < 0 && i < acc.length) {
-          val c = acc.charAt(i)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => if (depth == 0) end = i else depth -= 1
-            case ';' if depth == 0 => end = i
-            case ch if depth == 0 && Character.isLetter(ch) &&
-              (i == 0 || !Character.isLetterOrDigit(acc.charAt(i - 1))
-                && acc.charAt(i - 1) != '_') =>
-              val word = acc.substring(i).takeWhile(x =>
-                Character.isLetterOrDigit(x) || x == '_').toUpperCase
-              if (enders.contains(word)) end = i
-            case _ =>
-          }
-          i += 1
+    foldUnquoted(s, """(?i)\bGROUP\s+BY\b""".r) { (acc, m) =>
+        // clause extent: up to a closing paren below the clause's own
+        // depth, a top-level clause keyword, or ';'
+        val tail = acc.substring(m.end)
+        val ender = topLevelWords(tail)
+          .find { case (_, w) => enders(w.toUpperCase) }.map(_._1)
+        val stop = scanTop(tail) { (i, d) =>
+          d == 0 && (tail.charAt(i) == ')' || tail.charAt(i) == ';') ||
+            ender.contains(i)
         }
-        if (end < 0) end = acc.length
+        val end = if (stop < 0) acc.length else m.end + stop
         val list = acc.substring(m.end, end)
         if ("""(?i)\b(ROLLUP|CUBE|GROUPING)\b""".r
           .findFirstIn(list).isDefined || list.trim.isEmpty) acc
@@ -1644,31 +1334,8 @@ object Dialect {
     * codegen'd).
     */
   private def rewriteBinaryCast(s: String): String = {
-    val re = """(?i)\bCAST\s*\(""".r
-    re.findAllMatchIn(s).toSeq
-      .filter(mm => !inQuoteMap(s)(mm.start))
-      .reverse.foldLeft(s) { (acc, m) =>
-        var depth = 1
-        var i = m.end
-        var inQ = false
-        var asAt = -1
-        var close = -1
-        while (close < 0 && i < acc.length) {
-          val c = acc.charAt(i)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case 'A' | 'a' if depth == 1 =>
-              if (acc.regionMatches(true, i, "AS", 0, 2) && i > 0 &&
-                !Character.isLetterOrDigit(acc.charAt(i - 1)) &&
-                i + 2 < acc.length &&
-                !Character.isLetterOrDigit(acc.charAt(i + 2))) asAt = i
-            case _ =>
-          }
-          i += 1
-        }
+    foldUnquoted(s, """(?i)\bCAST\s*\(""".r) { (acc, m) =>
+        val (close, asAt) = castParts(acc, m)
         val binN =
           """(?i)^(VAR)?BINARY(?:\s*\(\s*(\d+)\s*\))?$""".r
         // the run block's ROW-constructor rewrite has already renamed
@@ -1714,25 +1381,8 @@ object Dialect {
     */
   private def rewriteMultiArgGrouping(s0: String): String = {
     def lower(s: String, name: String, minArgs: Int): String = {
-      val re = ("""(?i)\b""" + name + """\s*\(""").r
-      re.findAllMatchIn(s).toSeq
-        .filter(mm => !inQuoteMap(s)(mm.start))
-        .reverse.foldLeft(s) { (acc, m) =>
-          var depth = 1
-          var i = m.end
-          var inQ = false
-          var close = -1
-          while (close < 0 && i < acc.length) {
-            val c = acc.charAt(i)
-            if (inQ) { if (c == '\'') inQ = false }
-            else c match {
-              case '\'' => inQ = true
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = i
-              case _ =>
-            }
-            i += 1
-          }
+      foldUnquoted(s, ("""(?i)\b""" + name + """\s*\(""").r) { (acc, m) =>
+          val close = balancedClose(acc, m.end - 1)
           if (close < 0) acc
           else {
             val args = splitTopLevel(acc.substring(m.end, close))
@@ -1767,14 +1417,10 @@ object Dialect {
   private[graft] def stripComments(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
-    var inQ = false   // single-quoted string literal
-    var inD = false   // double-quoted identifier
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inQ) { sb += c; if (c == '\'') inQ = false; i += 1 }
-      else if (inD) { sb += c; if (c == '"') inD = false; i += 1 }
-      else if (c == '\'') { sb += c; inQ = true; i += 1 }
-      else if (c == '"') { sb += c; inD = true; i += 1 }
+      val e = quotedEnd(s, i)
+      if (e > i) { sb ++= s.substring(i, e); i = e }
       else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
         while (i < s.length && s.charAt(i) != '\n') i += 1
         sb += ' '
@@ -1815,9 +1461,10 @@ object Dialect {
     * e.g. a size hint) have no Spark surface and are dropped with a
     * note. Hints inside string literals are untouched.
     */
-  private def rewriteHints(s: String): String =
+  private def rewriteHints(s: String): String = {
+    lazy val quoted = inQuoteMap(s)
     hintBlock.replaceSomeIn(s, m => {
-      if (inQuoteMap(s)(m.start)) None
+      if (quoted(m.start)) None
       else {
         var j = m.start - 1
         while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
@@ -1839,6 +1486,7 @@ object Dialect {
         }
       }
     })
+  }
 
   private val asofJoinKw = """(?is)\b(LEFT\s+)?ASOF\s+JOIN\b""".r
 
@@ -1890,7 +1538,7 @@ object Dialect {
     * this ASOF join is rewritten to `L.*, R.*`.
     */
   private def rewriteAsofJoin(s: String): String =
-    asofJoinKw.findAllMatchIn(s).find(m => !inQuoteMap(s)(m.start)) match {
+    unquotedMatches(s, asofJoinKw).nextOption() match {
       case None => s
       case Some(m) =>
         val isLeft = m.group(1) != null
@@ -1899,21 +1547,7 @@ object Dialect {
         def skipWs(): Unit =
           while (i < s.length && s.charAt(i).isWhitespace) i += 1
         def balanceFrom(p: Int): Int = {
-          var depth = 0
-          var inQ = false
-          var j = p
-          var close = -1
-          while (close < 0 && j < s.length) {
-            val c = s.charAt(j)
-            if (inQ) { if (c == '\'') inQ = false }
-            else c match {
-              case '\'' => inQ = true
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ => ()
-            }
-            j += 1
-          }
+          val close = balancedClose(s, p)
           require(close > 0, s"unbalanced parens in ASOF JOIN: $s")
           close
         }
@@ -1960,27 +1594,8 @@ object Dialect {
             r
           } else {
             val st = i
-            var onAt = -1
-            var d = 0
-            var q = false
-            while (onAt < 0 && i < s.length) {
-              val c = s.charAt(i)
-              if (q) { if (c == '\'') q = false; i += 1 }
-              else c match {
-                case '\'' => q = true; i += 1
-                case '(' => d += 1; i += 1
-                case ')' => d -= 1; i += 1
-                case c0 if d == 0 && (c0 == 'O' || c0 == 'o') &&
-                    (i == 0 || !(s.charAt(i - 1).isLetterOrDigit ||
-                      s.charAt(i - 1) == '_')) &&
-                    i + 2 <= s.length &&
-                    s.regionMatches(true, i, "ON", 0, 2) &&
-                    (i + 2 >= s.length ||
-                      !(s.charAt(i + 2).isLetterOrDigit ||
-                        s.charAt(i + 2) == '_')) => onAt = i
-                case _ => i += 1
-              }
-            }
+            val onAt = topLevelKeyword(s.substring(st), "ON").headOption
+              .fold(-1)(_ + st)
             require(onAt >= 0, s"ASOF JOIN requires an ON condition: $s")
             val r = s.substring(st, onAt).trim
             i = onAt
@@ -1997,65 +1612,25 @@ object Dialect {
           "INTERSECT", "MINUS", "LEFT", "RIGHT", "FULL", "INNER", "CROSS",
           "JOIN", "NATURAL", "ASOF", "OUTER")
         val onStart = i
-        var depth = baseDepth
-        var inQ = false
-        var onEnd = -1
-        while (onEnd < 0 && i < s.length) {
-          val c = s.charAt(i)
-          if (inQ) { if (c == '\'') inQ = false; i += 1 }
-          else c match {
-            case '\'' => inQ = true; i += 1
-            case '(' => depth += 1; i += 1
-            case ')' =>
-              if (depth == baseDepth) onEnd = i else { depth -= 1; i += 1 }
-            case ',' if depth == baseDepth => onEnd = i
-            case c0 if c0.isLetter && depth == baseDepth &&
-                (i == 0 || !(s.charAt(i - 1).isLetterOrDigit ||
-                  s.charAt(i - 1) == '_' || s.charAt(i - 1) == '.')) =>
-              val st = i
-              var j = i
-              while (j < s.length && (s.charAt(j).isLetterOrDigit ||
-                s.charAt(j) == '_')) j += 1
-              val word = s.substring(st, j).toUpperCase
-              if (stopKw.contains(word)) onEnd = st else i = j
-            case _ => i += 1
-          }
+        val tail = s.substring(onStart)
+        val stopAt = topLevelWords(tail)
+          .find { case (_, w) => stopKw(w.toUpperCase) }.map(_._1)
+        val onStop = scanTop(tail) { (j, d) =>
+          d == 0 && (tail.charAt(j) == ')' || tail.charAt(j) == ',') ||
+            stopAt.contains(j)
         }
-        if (onEnd < 0) onEnd = s.length
+        val onEnd = if (onStop < 0) s.length else onStart + onStop
         val onCond = s.substring(onStart, onEnd).trim
         // the comparison operator: >=, <=, > or < at top level (the
         // reference's AsofTests exercise all four; <> is not a match op)
-        val (opIdx, op) = {
-          var j = 0
-          var d = 0
-          var q = false
-          var at = -1
-          var o = ""
-          while (at < 0 && j < mc.length) {
-            val c = mc.charAt(j)
-            if (q) { if (c == '\'') q = false }
-            else c match {
-              case '\'' => q = true
-              case '(' => d += 1
-              case ')' => d -= 1
-              case '>' if d == 0 =>
-                if (j + 1 < mc.length && mc.charAt(j + 1) == '=') {
-                  at = j; o = ">="
-                } else { at = j; o = ">" }
-              case '<' if d == 0 =>
-                if (j + 1 < mc.length && mc.charAt(j + 1) == '=') {
-                  at = j; o = "<="
-                } else if (j + 1 < mc.length && mc.charAt(j + 1) == '>') {
-                  j += 1 // <> is not a match comparison
-                } else { at = j; o = "<" }
-              case _ => ()
-            }
-            j += 1
-          }
-          require(at >= 0,
-            s"MATCH_CONDITION must use one of >= <= > < : $mc")
-          (at, o)
+        def at(j: Int, c: Char) = j >= 0 && j < mc.length && mc.charAt(j) == c
+        val opIdx = scanTop(mc) { (j, d) =>
+          d == 0 && (at(j, '>') && !at(j - 1, '<') ||
+            at(j, '<') && !at(j + 1, '>'))
         }
+        require(opIdx >= 0,
+          s"MATCH_CONDITION must use one of >= <= > < : $mc")
+        val op = mc.substring(opIdx, opIdx + (if (at(opIdx + 1, '=')) 2 else 1))
         val (lhs, rhs) = (mc.substring(0, opIdx).trim,
           mc.substring(opIdx + op.length).trim)
         // right-side reference: `alias.` prefix, or — when the right
@@ -2126,36 +1701,18 @@ object Dialect {
       mcLhs: String, mcRhs: String, refsRight: String => Boolean,
       onCond: String, backward: Boolean, strict: Boolean)
       : Option[String] = {
-    val quotes = inQuoteMap(s)
     val identRe = "(?i)^[A-Za-z_]\\w*$".r
     if (!identRe.matches(rName)) return None
     // the governing FROM: the last one before the ASOF at the same depth
-    val fromM = """(?is)\bFROM\b""".r.findAllMatchIn(s)
-      .filter(fm => fm.end <= asofStart && !quotes(fm.start) &&
+    val fromM = unquotedMatches(s, """(?is)\bFROM\b""".r)
+      .filter(fm => fm.end <= asofStart &&
         depthAt(s, fm.start) == baseDepth).toSeq.lastOption
       .getOrElse(return None)
     // left operand = the last comma-separated FROM item before the ASOF
-    var segStart = fromM.end
-    var multiFrom = false
-    locally {
-      var depth = baseDepth
-      var inQ = false
-      var i = fromM.end
-      while (i < asofStart) {
-        val c = s.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == baseDepth =>
-            segStart = i + 1; multiFrom = true
-          case _ => ()
-        }
-        i += 1
-      }
-    }
-    if (onEnd < s.length && s.charAt(onEnd) == ',') multiFrom = true
+    val fromItems = splitTopLevel(s.substring(fromM.end, asofStart))
+    val segStart = asofStart - fromItems.last.length
+    val multiFrom = fromItems.size > 1 ||
+      onEnd < s.length && s.charAt(onEnd) == ','
     val seg = s.substring(segStart, asofStart).trim
     if (seg.isEmpty) return None
     // a left operand that is a non table/subquery/ON-join form (APPLY,
@@ -2163,50 +1720,13 @@ object Dialect {
     // back; an ON-join tree takes the multi-alias capture path below
     val disq = Set("APPLY", "LATERAL", "UNNEST", "VALUES",
       "TABLE", "PIVOT", "UNPIVOT", "TABLESAMPLE", "NATURAL", "USING")
-    var segHasJoin = false
-    locally {
-      var depth = 0
-      var inQ = false
-      var i = 0
-      while (i < seg.length) {
-        val c = seg.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false; i += 1 }
-        else c match {
-          case '\'' => inQ = true; i += 1
-          case '(' => depth += 1; i += 1
-          case ')' => depth -= 1; i += 1
-          case c0 if c0.isLetter && depth == 0 &&
-              (i == 0 || !(seg.charAt(i - 1).isLetterOrDigit ||
-                seg.charAt(i - 1) == '_' || seg.charAt(i - 1) == '.')) =>
-            var j = i
-            while (j < seg.length && (seg.charAt(j).isLetterOrDigit ||
-              seg.charAt(j) == '_')) j += 1
-            val w = seg.substring(i, j).toUpperCase
-            if (disq.contains(w)) return None
-            if (w == "JOIN") segHasJoin = true
-            i = j
-          case _ => i += 1
-        }
-      }
-    }
+    val segWords = topLevelWords(seg).map(_._2.toUpperCase)
+    if (segWords.exists(disq)) return None
+    val segHasJoin = segWords.contains("JOIN")
     // parse `<table|(subquery)> [AS] alias`
     def singleAlias(): Option[String] = Some {
       if (seg.startsWith("(")) {
-        var depth = 0
-        var inQ = false
-        var close = -1
-        var j = 0
-        while (close < 0 && j < seg.length) {
-          val c = seg.charAt(j)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = j
-            case _ => ()
-          }
-          j += 1
-        }
+        val close = balancedClose(seg, 0)
         if (close < 0) return None
         val rest = seg.substring(close + 1).trim
         // alias may carry a column list: `(subquery) AS t1(k, t)`
@@ -2239,26 +1759,10 @@ object Dialect {
     if (conjuncts.exists(c =>
         splitTopLevelKeyword(c, "OR").lengthIs > 1)) return None
     val keyPairs = conjuncts.map { c =>
-      val eq = {
-        var d = 0
-        var q = false
-        var at = -1
-        var j = 0
-        while (at < 0 && j < c.length) {
-          val ch = c.charAt(j)
-          if (q) { if (ch == '\'') q = false }
-          else ch match {
-            case '\'' => q = true
-            case '(' => d += 1
-            case ')' => d -= 1
-            case '=' if d == 0 &&
-                (j == 0 || !"<>!=".contains(c.charAt(j - 1))) &&
-                (j + 1 >= c.length || c.charAt(j + 1) != '=') => at = j
-            case _ => ()
-          }
-          j += 1
-        }
-        at
+      val eq = scanTop(c) { (j, d) =>
+        d == 0 && c.charAt(j) == '=' &&
+          (j == 0 || !"<>!=".contains(c.charAt(j - 1))) &&
+          (j + 1 >= c.length || c.charAt(j + 1) != '=')
       }
       if (eq < 0) return None
       val (a, b) = (c.substring(0, eq).trim, c.substring(eq + 1).trim)
@@ -2283,38 +1787,21 @@ object Dialect {
     // over a multi-item FROM it is not provable — fall back
     var starSpan: Option[(Int, Int, String)] = None
     var starOverMultiFrom = false
-    val selM = """(?is)\bSELECT\b""".r.findAllMatchIn(s)
-      .filter(sm => sm.end <= fromM.start && !quotes(sm.start) &&
+    val selM = unquotedMatches(s, """(?is)\bSELECT\b""".r)
+      .filter(sm => sm.end <= fromM.start &&
         depthAt(s, sm.start) == baseDepth).toSeq.lastOption
     selM.foreach { sm =>
       var itemStart = sm.end
-      var depth = baseDepth
-      var inQ = false
-      var i = sm.end
-      def checkItem(endAt: Int): Unit = {
-        val item = s.substring(itemStart, endAt)
-        val bare = "(?is)^(\\s*(?:DISTINCT\\s+)?)\\*\\s*$".r
+      val bare = "(?is)^(\\s*(?:DISTINCT\\s+)?)\\*\\s*$".r
+      splitTopLevel(s.substring(sm.end, fromM.start)).foreach { item =>
         bare.findFirstMatchIn(item).foreach { bm =>
           if (multiFrom) starOverMultiFrom = true
-          else starSpan = Some((itemStart, endAt,
+          else starSpan = Some((itemStart, itemStart + item.length,
             bm.group(1) + aliases.map(_ + ".*").mkString(", ") +
               s", $rName.* "))
         }
+        itemStart += item.length + 1
       }
-      while (i < fromM.start) {
-        val c = s.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else c match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == baseDepth =>
-            checkItem(i); itemStart = i + 1
-          case _ => ()
-        }
-        i += 1
-      }
-      checkItem(fromM.start)
     }
     if (starOverMultiFrom) return None
     val ks = keyPairs.indices.map(i => s"__k$i")
@@ -2378,28 +1865,13 @@ object Dialect {
     val toks = scala.collection.mutable.ArrayBuffer[Tok]()
     locally {
       var i = 0
-      var inQ = false
       while (i < seg.length) {
         val c = seg.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false; i += 1 }
+        val e = quotedEnd(seg, i)
+        if (e > i) i = e
         else c match {
-          case '\'' => inQ = true; i += 1
           case '(' =>
-            var d = 0
-            var q = false
-            var close = -1
-            var j = i
-            while (close < 0 && j < seg.length) {
-              val ch = seg.charAt(j)
-              if (q) { if (ch == '\'') q = false }
-              else ch match {
-                case '\'' => q = true
-                case '(' => d += 1
-                case ')' => d -= 1; if (d == 0) close = j
-                case _ => ()
-              }
-              j += 1
-            }
+            val close = balancedClose(seg, i)
             if (close < 0) return None
             toks += Tok("()", call = false)
             i = close + 1
@@ -2485,33 +1957,9 @@ object Dialect {
 
   /** Split on a depth-0, out-of-quote keyword (word-bounded). */
   private def splitTopLevelKeyword(s: String, kw: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var start = 0
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false; i += 1 }
-      else c match {
-        case '\'' => inQ = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c0 if depth == 0 && c0.isLetter &&
-            (i == 0 || !(s.charAt(i - 1).isLetterOrDigit ||
-              s.charAt(i - 1) == '_' || s.charAt(i - 1) == '.')) =>
-          var j = i
-          while (j < s.length && (s.charAt(j).isLetterOrDigit ||
-            s.charAt(j) == '_')) j += 1
-          if (s.substring(i, j).equalsIgnoreCase(kw)) {
-            out += s.substring(start, i); start = j
-          }
-          i = j
-        case _ => i += 1
-      }
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
+    val at = topLevelKeyword(s, kw)
+    ((0 +: at.map(_ + kw.length)) zip (at :+ s.length))
+      .map { case (a, b) => s.substring(a, b).trim }.filter(_.nonEmpty)
   }
 
   private val distinctOnKw =
@@ -2532,9 +1980,7 @@ object Dialect {
     * SELECT block.
     */
   private def rewriteDistinctOn(s: String, adHoc: Boolean): String =
-    distinctOnKw.findAllMatchIn(s)
-      .find(m => !inQuoteMap(s)(m.start))
-    match {
+    unquotedMatches(s, distinctOnKw).nextOption() match {
       case None => s
       case Some(m) if depthAt(s, m.start) > 0 =>
         val (open, close) = enclosingGroup(s, m.start)
@@ -2542,44 +1988,24 @@ object Dialect {
           rewriteDistinctOn(s.substring(open + 1, close), adHoc = false) +
           s.substring(close), adHoc)
       case Some(m) =>
-        val onClose = {
-          var depth = 0
-          var inQ = false
-          var j = m.end - 1
-          var close = -1
-          while (close < 0 && j < s.length) {
-            val c = s.charAt(j)
-            if (inQ) { if (c == '\'') inQ = false }
-            else c match {
-              case '\'' => inQ = true
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ => ()
-            }
-            j += 1
-          }
-          require(close > 0, s"unbalanced DISTINCT ON clause: $s")
-          close
-        }
+        val onClose = balancedClose(s, m.end - 1)
+        require(onClose > 0, s"unbalanced DISTINCT ON clause: $s")
         val onExprs = splitTopLevel(s.substring(m.end, onClose))
           .map(_.trim)
-        val fromStart = """(?is)\bFROM\b""".r.findAllMatchIn(s)
+        val fromStart = unquotedMatches(s, """(?is)\bFROM\b""".r)
           .map(_.start)
-          .find(p => p > onClose && !inQuoteMap(s)(p) &&
-            depthAt(s, p) == 0)
+          .find(p => p > onClose && depthAt(s, p) == 0)
           .getOrElse(sys.error(s"DISTINCT ON without FROM: $s"))
         val list = s.substring(onClose + 1, fromStart)
         // the trailing ORDER BY of this statement (depth 0)
-        val orderM = """(?is)\bORDER\s+BY\b""".r.findAllMatchIn(s)
-          .find(p => p.start > fromStart && !inQuoteMap(s)(p.start) &&
-            depthAt(s, p.start) == 0)
+        val orderM = unquotedMatches(s, """(?is)\bORDER\s+BY\b""".r)
+          .find(p => p.start > fromStart && depthAt(s, p.start) == 0)
         val (bodyEnd, orderItems, tail) = orderM match {
           case None => (s.length, onExprs, "")
           case Some(om) =>
-            val limStart = """(?is)\b(LIMIT|OFFSET|FETCH)\b""".r
-              .findAllMatchIn(s).map(_.start)
-              .find(p => p > om.end && !inQuoteMap(s)(p) &&
-                depthAt(s, p) == 0)
+            val limStart =
+              unquotedMatches(s, """(?is)\b(LIMIT|OFFSET|FETCH)\b""".r)
+                .map(_.start).find(p => p > om.end && depthAt(s, p) == 0)
             // the ORDER BY may reference columns the select list does
     // not project (legal in DISTINCT ON); those are visible to the
     // WINDOW inside the subquery but not through it — so in a VIEW
@@ -2652,9 +2078,7 @@ object Dialect {
     * SELECT block.
     */
   private def rewriteQualify(s: String): String =
-    qualifyKw.findAllMatchIn(s)
-      .find(m => !inQuoteMap(s)(m.start))
-    match {
+    unquotedMatches(s, qualifyKw).nextOption() match {
       case None => s
       case Some(m) if depthAt(s, m.start) > 0 =>
         val (open, close) = enclosingGroup(s, m.start)
@@ -2665,26 +2089,23 @@ object Dialect {
         // the predicate runs to the first depth-0 trailing clause
         val tailRe =
           """(?is)\b(ORDER\s+BY|LIMIT|OFFSET|FETCH|UNION|EXCEPT|INTERSECT|MINUS)\b""".r
-        val predEnd = tailRe.findAllMatchIn(s).map(_.start)
-          .find(p => p > m.end && !inQuoteMap(s)(p) && depthAt(s, p) == 0)
+        val predEnd = unquotedMatches(s, tailRe).map(_.start)
+          .find(p => p > m.end && depthAt(s, p) == 0)
           .getOrElse(s.length)
         val pred = s.substring(m.end, predEnd).trim
         val tail = s.substring(predEnd)
         val head = s.substring(0, m.start)
         // the QUALIFY's own SELECT block = the LAST depth-0 SELECT
         // before it (a depth-0 set-op chain puts earlier blocks in head)
-        val selStart = """(?is)\bSELECT\b""".r.findAllMatchIn(head)
-          .map(_.start)
-          .filter(p => !inQuoteMap(head)(p) && depthAt(head, p) == 0)
+        val selStart = unquotedMatches(head, """(?is)\bSELECT\b""".r)
+          .map(_.start).filter(p => depthAt(head, p) == 0)
           .toSeq.lastOption
           .getOrElse(sys.error(s"QUALIFY outside a SELECT block: $s"))
         val distinctRe = """(?is)^SELECT\s+(DISTINCT\s+)?""".r
         val selM = distinctRe.findFirstMatchIn(head.substring(selStart)).get
         val listStart = selStart + selM.end
-        val fromStart = """(?is)\bFROM\b""".r.findAllMatchIn(head)
-          .map(_.start)
-          .find(p => p > listStart && !inQuoteMap(head)(p) &&
-            depthAt(head, p) == 0)
+        val fromStart = unquotedMatches(head, """(?is)\bFROM\b""".r)
+          .map(_.start).find(p => p > listStart && depthAt(head, p) == 0)
           .getOrElse(sys.error(s"QUALIFY SELECT block has no FROM: $s"))
         val list = head.substring(listStart, fromStart)
         // alias → expression map from the list's explicit AS aliases
@@ -2720,145 +2141,195 @@ object Dialect {
             (if (tail.trim.isEmpty) "" else " " + tail.trim))
     }
 
+  /** The one owner of the dialect's quoting rules: the index just past
+    * the quoted span that opens at `i`, or `i` when none opens there.
+    * A span is a `'…'` string literal or a `"…"` / `` `…` `` quoted
+    * identifier; inside each, a doubled delimiter is an escaped one. An
+    * unterminated span runs to the end of `s`. Every quote-aware scan
+    * below (and in Ddl, the runtime and the corpora) skips text through
+    * this function, so no rewriter reads inside a literal or a quoted
+    * identifier — a quoted identifier named like a keyword (`"VARCHAR"`,
+    * `"qualify"`) or holding a bracket must never trigger a rewrite.
+    */
+  private[graft] def quotedEnd(s: String, i: Int): Int =
+    if (i >= s.length || "'\"`".indexOf(s.charAt(i).toInt) < 0) i
+    else {
+      val c = s.charAt(i)
+      var j = i + 1
+      var end = -1
+      while (end < 0 && j < s.length) {
+        if (s.charAt(j) != c) j += 1
+        else if (j + 1 < s.length && s.charAt(j + 1) == c) j += 2
+        else end = j + 1
+      }
+      if (end < 0) s.length else end
+    }
+
+  /** Walks `s` from `from`, skipping quoted spans, and returns the first
+    * unquoted index `i` where `stop(i, depth)` holds, or -1. `depth`
+    * counts the `open`/`close` brackets opened since `from` and not yet
+    * closed before `i` (a closing bracket still sees its own level).
+    */
+  private def scanTop(s: String, from: Int = 0, open: Char = '(',
+      close: Char = ')')(stop: (Int, Int) => Boolean): Int = {
+    var depth = 0
+    var i = from
+    while (i < s.length) {
+      val e = quotedEnd(s, i)
+      if (e > i) i = e
+      else if (stop(i, depth)) return i
+      else {
+        val c = s.charAt(i)
+        if (c == open) depth += 1 else if (c == close) depth -= 1
+        i += 1
+      }
+    }
+    -1
+  }
+
+  /** Index of the bracket closing the `(` or `[` at `open`, or -1. */
+  private[graft] def balancedClose(s: String, open: Int): Int = {
+    val (o, c) = if (s.charAt(open) == '[') ('[', ']') else ('(', ')')
+    scanTop(s, open, o, c)((i, d) => d == 1 && s.charAt(i) == c)
+  }
+
+  /** Index of the `(` that the `)` at `close` closes, or -1. */
+  private def balancedOpen(s: String, close: Int): Int = {
+    val quoted = inQuoteMap(s)
+    var depth = 0
+    var j = close
+    while (j >= 0) {
+      if (!quoted(j)) s.charAt(j) match {
+        case ')' => depth += 1
+        case '(' => depth -= 1; if (depth == 0) return j
+        case _ => ()
+      }
+      j -= 1
+    }
+    -1
+  }
+
   /** (openIdx, closeIdx) of the innermost paren group containing
-    * `pos` (quote-aware). The caller guarantees depthAt(s, pos) > 0.
+    * `pos`. The caller guarantees depthAt(s, pos) > 0.
     */
   private def enclosingGroup(s: String, pos: Int): (Int, Int) = {
     val opens = scala.collection.mutable.Stack[Int]()
-    var inQ = false
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
+    scanTop(s) { (i, _) =>
+      if (i < pos) s.charAt(i) match {
         case '(' => opens.push(i)
         case ')' => if (opens.nonEmpty) opens.pop()
         case _ => ()
       }
-      i += 1
+      i >= pos
     }
     require(opens.nonEmpty, s"no enclosing paren group at $pos in: $s")
     val open = opens.top
-    var depth = 0
-    inQ = false
-    i = pos
-    var close = -1
-    while (close < 0 && i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => if (depth == 0) close = i else depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
+    val close = balancedClose(s, open)
     require(close > open, s"unbalanced paren group at $open in: $s")
     (open, close)
   }
 
   private def depthAt(s: String, pos: Int): Int = {
     var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
+    scanTop(s) { (i, d) => depth = d; i >= pos }
     depth
   }
 
-  /** Split on depth-0 commas outside quotes. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { cur += c; if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.result(); cur.clear()
-        case _ => cur += c
+  /** Split on depth-0 `sep` characters outside quoted spans. */
+  private[graft] def splitTopLevel(s: String,
+      sep: Char = ','): IndexedSeq[String] = {
+    val out = Vector.newBuilder[String]
+    var start = 0
+    scanTop(s) { (i, d) =>
+      if (d == 0 && s.charAt(i) == sep) {
+        out += s.substring(start, i); start = i + 1
       }
-      i += 1
+      false
     }
-    out += cur.result()
+    (out += s.substring(start)).result()
+  }
+
+  /** (start, word) of each depth-0 word outside quoted spans — a word
+    * is a maximal letter/digit/underscore run not preceded by a word
+    * character or a qualifying dot.
+    */
+  private def topLevelWords(s: String): Seq[(Int, String)] = {
+    def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
+    val out = Seq.newBuilder[(Int, String)]
+    scanTop(s) { (i, d) =>
+      if (d == 0 && wordChar(s.charAt(i)) && (i == 0 ||
+          !(wordChar(s.charAt(i - 1)) || s.charAt(i - 1) == '.'))) {
+        var j = i
+        while (j < s.length && wordChar(s.charAt(j))) j += 1
+        out += i -> s.substring(i, j)
+      }
+      false
+    }
     out.result()
   }
 
-  /** Index of the last depth-0 `AS` keyword in a select item, or -1. */
-  private def lastTopLevelAsIdx(s: String): Int = {
-    var last = -1
-    var depth = 0
-    var inQ = false
-    var i = 0
-    def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'A' | 'a' if depth == 0 && i + 1 < s.length &&
-            (s.charAt(i + 1) == 'S' || s.charAt(i + 1) == 's') &&
-            (i == 0 || !wordChar(s.charAt(i - 1))) &&
-            (i + 2 >= s.length || !wordChar(s.charAt(i + 2))) =>
-          last = i
-        case _ => ()
-      }
-      i += 1
-    }
-    last
-  }
+  /** Start indices of the depth-0 occurrences of keyword `kw`. */
+  private def topLevelKeyword(s: String, kw: String): Seq[Int] =
+    topLevelWords(s).collect { case (i, w) if w.equalsIgnoreCase(kw) => i }
 
-  /** Per-character map of text no rewriter may touch: single-quoted
-    * string literals (with `''` escapes) AND backtick-quoted
-    * identifiers (with ``` `` ``` escapes — rewriteQuotedIdents emits
-    * them, and a quoted identifier named like a keyword, `"VARCHAR"`,
-    * `"qualify"`, must never trigger a keyword rewrite).
-    */
+  /** Index of the last depth-0 `AS` keyword in a select item, or -1. */
+  private[graft] def lastTopLevelAsIdx(s: String): Int =
+    topLevelKeyword(s, "AS").lastOption.getOrElse(-1)
+
+  /** Per-character map of the quoted spans of `s` (see [[quotedEnd]]). */
   private[graft] def inQuoteMap(s: String): Array[Boolean] = {
     val m = new Array[Boolean](s.length)
-    var inQ = false
-    var inBt = false
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) {
-        m(i) = true
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            m(i + 1) = true; i += 1
-          } else inQ = false
-        }
-      } else if (inBt) {
-        m(i) = true
-        if (c == '`') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '`') {
-            m(i + 1) = true; i += 1
-          } else inBt = false
-        }
-      } else if (c == '\'') { m(i) = true; inQ = true }
-      else if (c == '`') { m(i) = true; inBt = true }
-      i += 1
+      val e = quotedEnd(s, i)
+      if (e > i) { java.util.Arrays.fill(m, i, e, true); i = e }
+      else i += 1
     }
     m
   }
+
+  /** Matches of `re` in `s` that start outside quoted spans. */
+  private[graft] def unquotedMatches(s: String,
+      re: scala.util.matching.Regex)
+      : Iterator[scala.util.matching.Regex.Match] = {
+    lazy val quoted = inQuoteMap(s)
+    re.findAllMatchIn(s).filter(m => !quoted(m.start))
+  }
+
+  /** Folds `step` over the unquoted matches of `re` from the last to the
+    * first, so a step's edit never moves an earlier match.
+    */
+  private def foldUnquoted(s: String, re: scala.util.matching.Regex)(
+      step: (String, scala.util.matching.Regex.Match) => String): String =
+    unquotedMatches(s, re).toSeq.reverse.foldLeft(s)(step)
+
+  private def replaceGuarded(s: String, re: scala.util.matching.Regex)(
+      f: scala.util.matching.Regex.Match => String): String =
+    foldUnquoted(s, re)((acc, m) =>
+      acc.substring(0, m.start) + f(m) + acc.substring(m.end))
+
+  /** Rebuilds `s` from `f(text, quoted)` over its pieces in order: each
+    * quoted span with its delimiters (quoted = true) and the unquoted run
+    * before each span and at the end (quoted = false, possibly empty).
+    */
+  private def mapRuns(s: String)(f: (String, Boolean) => String): String = {
+    val out = new StringBuilder(s.length)
+    var start = 0
+    var i = 0
+    while (i < s.length) {
+      val e = quotedEnd(s, i)
+      if (e > i) {
+        out.append(f(s.substring(start, i), false))
+          .append(f(s.substring(i, e), true))
+        start = e; i = e
+      } else i += 1
+    }
+    out.append(f(s.substring(start), false)).toString
+  }
+
+  /** Apply `f` to the unquoted runs of `s`; quoted spans pass through. */
+  private[graft] def mapOutsideQuotes(s: String)(f: String => String): String =
+    mapRuns(s)((t, quoted) => if (quoted) t else f(t))
 
   /** Rewrite every `OUTER APPLY (subquery) [AS] alias [(cols)]` to
     * `LEFT OUTER JOIN LATERAL (subquery) [AS] alias [(cols)] ON TRUE`.
@@ -2870,8 +2341,7 @@ object Dialect {
     * in the reference corpus and maps through the FROM-clause path).
     */
   private def rewriteOuterApply(s: String): String =
-    outerApply.findAllMatchIn(s)
-      .find(m => !inQuoteMap(s)(m.start)) match {
+    unquotedMatches(s, outerApply).nextOption() match {
       case None => s
       case Some(m) =>
         var i = m.end
@@ -2881,21 +2351,7 @@ object Dialect {
           // unsupported APPLY spelling verbatim)
           s
         else {
-          var depth = 0
-          var inQ = false
-          var close = -1
-          var j = i
-          while (close < 0 && j < s.length) {
-            val c = s.charAt(j)
-            if (inQ) { if (c == '\'') inQ = false }
-            else c match {
-              case '\'' => inQ = true
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ => ()
-            }
-            j += 1
-          }
+          val close = balancedClose(s, i)
           require(close > 0, s"unbalanced OUTER APPLY subquery in: $s")
           // optional [AS] alias [(colAliases)]
           var k = close + 1
@@ -2912,21 +2368,7 @@ object Dialect {
               var k2 = k
               while (k2 < s.length && s.charAt(k2).isWhitespace) k2 += 1
               if (k2 < s.length && s.charAt(k2) == '(') {
-                var d2 = 0
-                var q2 = false
-                var c2 = -1
-                var j2 = k2
-                while (c2 < 0 && j2 < s.length) {
-                  val c = s.charAt(j2)
-                  if (q2) { if (c == '\'') q2 = false }
-                  else c match {
-                    case '\'' => q2 = true
-                    case '(' => d2 += 1
-                    case ')' => d2 -= 1; if (d2 == 0) c2 = j2
-                    case _ => ()
-                  }
-                  j2 += 1
-                }
+                val c2 = balancedClose(s, k2)
                 if (c2 > 0) k = c2 + 1
               }
             case _ => k = close + 1
@@ -2953,107 +2395,75 @@ object Dialect {
     * Spark's parser, same as before).
     */
   private def rewritePeriodPredicates(s: String): String = {
-    val quotes = inQuoteMap(s)
-    periodKw.findAllMatchIn(s).foreach { m =>
-      if (!quotes(m.start)) {
-        val imm = m.group(1) != null
-        val kw = m.group(2).toUpperCase
-        if (!imm || kw == "PRECEDES" || kw == "SUCCEEDS") {
-          // left operand: a paren group ending right before the keyword
-          var i = m.start - 1
-          while (i >= 0 && s.charAt(i).isWhitespace) i -= 1
-          if (i >= 0 && s.charAt(i) == ')') {
-            val close = i
-            var depth = 0
-            var open = -1
-            var j = close
-            while (open < 0 && j >= 0) {
-              if (!quotes(j)) s.charAt(j) match {
-                case ')' => depth += 1
-                case '(' => depth -= 1; if (depth == 0) open = j
-                case _ => ()
-              }
-              j -= 1
-            }
-            if (open >= 0) {
-              val lParts = splitTopLevel(s.substring(open + 1, close))
-              if (lParts.sizeIs == 2) {
-                val (s1, e1) = (lParts(0).trim, lParts(1).trim)
-                // right operand: pair, parenthesized value, or (for
-                // CONTAINS) a bare expression up to a depth-0 boundary
-                var k = m.end
-                while (k < s.length && s.charAt(k).isWhitespace) k += 1
-                val right: Option[(Seq[String], Int)] =
-                  if (k < s.length && s.charAt(k) == '(') {
-                    var d = 0
-                    var rc = -1
-                    var x = k
-                    while (rc < 0 && x < s.length) {
-                      if (!quotes(x)) s.charAt(x) match {
-                        case '(' => d += 1
-                        case ')' => d -= 1; if (d == 0) rc = x
-                        case _ => ()
-                      }
-                      x += 1
-                    }
-                    if (rc < 0) None
-                    else Some((splitTopLevel(s.substring(k + 1, rc))
-                      .map(_.trim), rc + 1))
-                  } else {
-                    val stop = ("(?is)\\b(AND|OR|WHERE|GROUP|ORDER|" +
-                      "HAVING|QUALIFY|UNION|EXCEPT|INTERSECT|MINUS|" +
-                      "LIMIT|OFFSET|FETCH|JOIN|ON|THEN|ELSE|END|WHEN|" +
-                      "AS|FROM|ASC|DESC|NULLS|WINDOW)\\b").r
-                    var d = 0
-                    var x = k
-                    var endAt = -1
-                    while (endAt < 0 && x < s.length) {
-                      if (!quotes(x)) s.charAt(x) match {
-                        case '(' => d += 1; x += 1
-                        case ')' if d == 0 => endAt = x
-                        case ')' => d -= 1; x += 1
-                        case ',' if d == 0 => endAt = x
-                        case c0 if d == 0 && (c0.isLetter || c0 == '_') &&
-                            !(s.charAt(x - 1).isLetterOrDigit ||
-                              s.charAt(x - 1) == '_' ||
-                              s.charAt(x - 1) == '.') &&
-                            stop.findPrefixOf(s.substring(x)).isDefined =>
-                          endAt = x
-                        case _ => x += 1
-                      }
-                    }
-                    if (endAt < 0) endAt = s.length
-                    val raw = s.substring(k, endAt)
-                    val v = raw.trim
-                    // splice point excludes the value's trailing
-                    // whitespace so the original spacing before the
-                    // next token survives
-                    if (v.isEmpty) None
-                    else Some((Seq(v),
-                      k + raw.lastIndexWhere(!_.isWhitespace) + 1))
+    unquotedMatches(s, periodKw).foreach { m =>
+      val imm = m.group(1) != null
+      val kw = m.group(2).toUpperCase
+      if (!imm || kw == "PRECEDES" || kw == "SUCCEEDS") {
+        // left operand: a paren group ending right before the keyword
+        var i = m.start - 1
+        while (i >= 0 && s.charAt(i).isWhitespace) i -= 1
+        if (i >= 0 && s.charAt(i) == ')') {
+          val close = i
+          val open = balancedOpen(s, close)
+          if (open >= 0) {
+            val lParts = splitTopLevel(s.substring(open + 1, close))
+            if (lParts.sizeIs == 2) {
+              val (s1, e1) = (lParts(0).trim, lParts(1).trim)
+              // right operand: pair, parenthesized value, or (for
+              // CONTAINS) a bare expression up to a depth-0 boundary
+              var k = m.end
+              while (k < s.length && s.charAt(k).isWhitespace) k += 1
+              val right: Option[(Seq[String], Int)] =
+                if (k < s.length && s.charAt(k) == '(') {
+                  val rc = balancedClose(s, k)
+                  if (rc < 0) None
+                  else Some((splitTopLevel(s.substring(k + 1, rc))
+                    .map(_.trim), rc + 1))
+                } else {
+                  val stop = ("(?is)\\b(AND|OR|WHERE|GROUP|ORDER|" +
+                    "HAVING|QUALIFY|UNION|EXCEPT|INTERSECT|MINUS|" +
+                    "LIMIT|OFFSET|FETCH|JOIN|ON|THEN|ELSE|END|WHEN|" +
+                    "AS|FROM|ASC|DESC|NULLS|WINDOW)\\b").r
+                  val stopAt = scanTop(s, k) { (x, d) =>
+                    val c0 = s.charAt(x)
+                    d == 0 && (c0 == ')' || c0 == ',' ||
+                      (c0.isLetter || c0 == '_') &&
+                        !(s.charAt(x - 1).isLetterOrDigit ||
+                          s.charAt(x - 1) == '_' ||
+                          s.charAt(x - 1) == '.') &&
+                        stop.findPrefixOf(s.substring(x)).isDefined)
                   }
-                right.foreach { case (rParts, rEnd) =>
-                  val repl: Option[String] = (kw, rParts) match {
-                    case ("OVERLAPS", Seq(s2, e2)) => Some(
-                      s"(($s1) <= ($e2) AND ($e1) >= ($s2))")
-                    case ("EQUALS", Seq(s2, e2)) => Some(
-                      s"(($s1) = ($s2) AND ($e1) = ($e2))")
-                    case ("PRECEDES", Seq(s2, _)) =>
-                      Some(if (imm) s"(($e1) = ($s2))"
-                      else s"(($e1) <= ($s2))")
-                    case ("SUCCEEDS", Seq(_, e2)) =>
-                      Some(if (imm) s"(($s1) = ($e2))"
-                      else s"(($s1) >= ($e2))")
-                    case ("CONTAINS", Seq(s2, e2)) => Some(
-                      s"(($s1) <= ($s2) AND ($e1) >= ($e2))")
-                    case ("CONTAINS", Seq(v)) => Some(
-                      s"(($s1) <= ($v) AND ($v) <= ($e1))")
-                    case _ => None
-                  }
-                  repl.foreach { r =>
-                    return rewritePeriodPredicates(
-                      s.substring(0, open) + r + s.substring(rEnd))
-                  }
+                  val endAt = if (stopAt < 0) s.length else stopAt
+                  val raw = s.substring(k, endAt)
+                  val v = raw.trim
+                  // splice point excludes the value's trailing
+                  // whitespace so the original spacing before the
+                  // next token survives
+                  if (v.isEmpty) None
+                  else Some((Seq(v),
+                    k + raw.lastIndexWhere(!_.isWhitespace) + 1))
+                }
+              right.foreach { case (rParts, rEnd) =>
+                val repl: Option[String] = (kw, rParts) match {
+                  case ("OVERLAPS", Seq(s2, e2)) => Some(
+                    s"(($s1) <= ($e2) AND ($e1) >= ($s2))")
+                  case ("EQUALS", Seq(s2, e2)) => Some(
+                    s"(($s1) = ($s2) AND ($e1) = ($e2))")
+                  case ("PRECEDES", Seq(s2, _)) =>
+                    Some(if (imm) s"(($e1) = ($s2))"
+                    else s"(($e1) <= ($s2))")
+                  case ("SUCCEEDS", Seq(_, e2)) =>
+                    Some(if (imm) s"(($s1) = ($e2))"
+                    else s"(($s1) >= ($e2))")
+                  case ("CONTAINS", Seq(s2, e2)) => Some(
+                    s"(($s1) <= ($s2) AND ($e1) >= ($e2))")
+                  case ("CONTAINS", Seq(v)) => Some(
+                    s"(($s1) <= ($v) AND ($v) <= ($e1))")
+                  case _ => None
+                }
+                repl.foreach { r =>
+                  return rewritePeriodPredicates(
+                    s.substring(0, open) + r + s.substring(rEnd))
                 }
               }
             }
@@ -3072,37 +2482,31 @@ object Dialect {
     * full ANSI arithmetic semantics, so this stays a spelling map).
     * Handles the `""` escape and the `U&"..." [UESCAPE 'c']` Unicode
     * code-point variant (4-hex-digit escapes, doubled escape char for
-    * the literal). An identifier containing a single quote or backtick
-    * is rejected loudly — it would derail the downstream quote-aware
-    * rewriters rather than fail cleanly at Spark's parser.
+    * the literal). An identifier containing a quote, paren, comma or
+    * semicolon is rejected loudly — Spark's parser and the statement
+    * splitters downstream read those as structure.
     */
+  private val quotedIdent = "\"(?:[^\"]|\"\")*\"".r
+
   private def rewriteQuotedIdents(s: String): String = {
     if (s.indexOf('"') < 0) return s
     val sb = new StringBuilder(s.length)
     var i = 0
-    var inQ = false
     def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
     while (i < s.length) {
       val c = s.charAt(i)
       val uniForm = (c == 'U' || c == 'u') && i + 2 < s.length &&
         s.charAt(i + 1) == '&' && s.charAt(i + 2) == '"' &&
         (i == 0 || !wordChar(s.charAt(i - 1)))
-      if (inQ) { sb += c; if (c == '\'') inQ = false; i += 1 }
-      else if (c == '\'') { sb += c; inQ = true; i += 1 }
-      else if (c == '"' || uniForm) {
-        var j = if (uniForm) i + 3 else i + 1
-        val ident = new StringBuilder
-        var open = true
-        while (open && j < s.length) {
-          val d = s.charAt(j)
-          if (d == '"') {
-            if (j + 1 < s.length && s.charAt(j + 1) == '"') {
-              ident += '"'; j += 2
-            } else { open = false; j += 1 }
-          } else { ident += d; j += 1 }
-        }
-        require(!open, s"unterminated quoted identifier in: $s")
-        var text = ident.toString
+      val open = if (uniForm) i + 2 else i
+      var j = quotedEnd(s, open)
+      if (j == open) { sb += c; i += 1 }
+      else if (s.charAt(open) != '"') { sb ++= s.substring(i, j); i = j }
+      else {
+        val raw = s.substring(open, j)
+        require(quotedIdent.matches(raw),
+          s"unterminated quoted identifier in: $s")
+        var text = raw.substring(1, raw.length - 1).replace("\"\"", "\"")
         if (uniForm) {
           val ue = """(?is)^\s*UESCAPE\s+'(.)'""".r
             .findFirstMatchIn(s.substring(j))
@@ -3134,7 +2538,7 @@ object Dialect {
         sb ++= text
         sb += '`'
         i = j
-      } else { sb += c; i += 1 }
+      }
     }
     sb.toString
   }
@@ -3194,28 +2598,12 @@ object Dialect {
     * form first (the DATA param is always first, per table.md).
     */
   private def rewriteWindowTvf(s: String): String =
-    windowTvf.findAllMatchIn(s)
-      .find(m => !inQuoteMap(s)(m.start)) match {
+    unquotedMatches(s, windowTvf).nextOption() match {
       case None => s
       case Some(m) =>
         val fn = m.group(1).toUpperCase
         val innerOpen = m.end - 1
-        // balanced scan for the inner call's close paren
-        var depth = 0
-        var inQ = false
-        var innerClose = -1
-        var j = innerOpen
-        while (innerClose < 0 && j < s.length) {
-          val c = s.charAt(j)
-          if (inQ) { if (c == '\'') inQ = false }
-          else c match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) innerClose = j
-            case _ => ()
-          }
-          j += 1
-        }
+        val innerClose = balancedClose(s, innerOpen)
         require(innerClose > 0, s"unbalanced $fn call in: $s")
         var k = innerClose + 1
         while (k < s.length && s.charAt(k).isWhitespace) k += 1
@@ -3309,40 +2697,4 @@ object Dialect {
         rewriteWindowTvf(
           s.substring(0, m.start) + replacement + s.substring(k + 1))
     }
-
-  /** Apply `f` to the unquoted runs of `s`; single-quoted SQL string
-    * literals (with `''` escapes) pass through verbatim.
-    */
-  private def mapOutsideQuotes(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val run = new StringBuilder
-    var inQuote = false
-    var inBt = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        out += c
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            out += '\''; i += 1
-          } else inQuote = false
-        }
-      } else if (inBt) {
-        out += c
-        if (c == '`') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '`') {
-            out += '`'; i += 1
-          } else inBt = false
-        }
-      } else if (c == '\'' || c == '`') {
-        out ++= f(run.toString); run.clear()
-        out += c
-        if (c == '\'') inQuote = true else inBt = true
-      } else run += c
-      i += 1
-    }
-    out ++= f(run.toString)
-    out.toString
-  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ddl.Dialect
+
 /** External conformance corpus: PostgreSQL's regression suite
   * (postgres/src/test/regress), as adapted into golden tests by the
   * reference compiler (sql-to-dbsp-compiler `compiler/sql/postgres/
@@ -321,32 +323,15 @@ object PgCorpus {
     out.result()
   }
 
-  /** Drop `--` comments outside single-quoted literals. */
-  private def stripLineComment(l: String): String = {
-    var inQ = false
-    var i = 0
-    while (i < l.length) {
-      val c = l.charAt(i)
-      if (c == '\'') inQ = !inQ
-      else if (!inQ && c == '-' && i + 1 < l.length &&
-        l.charAt(i + 1) == '-') return l.substring(0, i)
-      i += 1
-    }
-    l
-  }
+  /** Drop a `--` comment outside quoted spans. */
+  private def stripLineComment(l: String): String =
+    Dialect.unquotedMatches(l, lineComment).nextOption()
+      .fold(l)(m => l.substring(0, m.start))
 
-  private def splitStatements(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    for (c <- s) {
-      if (c == '\'') inQ = !inQ
-      if (c == ';' && !inQ) { out += cur.toString.trim; cur.clear() }
-      else cur += c
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.result().filter(_.nonEmpty)
-  }
+  private val lineComment = "--".r
+
+  private def splitStatements(s: String): Seq[String] =
+    Dialect.splitTopLevel(s, ';').map(_.trim).filter(_.nonEmpty)
 
   // ----------------------------------------------------------- setup
 
@@ -402,7 +387,7 @@ object PgCorpus {
       }
     for (stmt <- suite.setup) stmt match {
       case createTypeRe(name, body) =>
-        val fields = splitTopLevel(body, ',').map(_.trim)
+        val fields = Dialect.splitTopLevel(body).map(_.trim)
           .filter(_.nonEmpty).map { d =>
             val parts = d.split("\\s+", 2)
             s"${parts(0).toLowerCase}: ${mapPgTypes(parts(1).trim)}"
@@ -410,7 +395,7 @@ object PgCorpus {
         typeAliases(name.toLowerCase) =
           fields.mkString("STRUCT<", ", ", ">")
       case createRe(name, body) =>
-        val defs = splitTopLevel(body, ',').map(_.trim).filter(_.nonEmpty)
+        val defs = Dialect.splitTopLevel(body).map(_.trim).filter(_.nonEmpty)
           .filterNot(_.toUpperCase.startsWith("PRIMARY "))
           .map { d =>
             val parts = d.split("\\s+", 2)
@@ -431,7 +416,7 @@ object PgCorpus {
           scala.collection.mutable.Buffer[String]())
       case insertRe(name, colList, values) =>
         val t = name.toLowerCase
-        val tuples = splitTopLevel(values.trim, ',').map(_.trim)
+        val tuples = Dialect.splitTopLevel(values.trim).map(_.trim)
         val targetCols = Option(colList)
           .map(_.split(",").map(_.trim.toLowerCase).toSeq)
         val allCols = cols(t).map(_._1)
@@ -457,10 +442,10 @@ object PgCorpus {
             }
           targetCols match {
             case None =>
-              rows(t) += normalized(splitTopLevel(inner, ',')
+              rows(t) += normalized(Dialect.splitTopLevel(inner)
                 .map(_.trim)).mkString("(", ", ", ")")
             case Some(tc) => // reorder/pad to the full column list
-              val vals = splitTopLevel(inner, ',').map(_.trim)
+              val vals = Dialect.splitTopLevel(inner).map(_.trim)
               val byCol = tc.zip(vals).toMap
               rows(t) += normalized(
                 allCols.map(byCol.getOrElse(_, "NULL")))
@@ -506,23 +491,6 @@ object PgCorpus {
         s"CREATE OR REPLACE TEMPORARY VIEW $t AS $body"))
     }
     cols.toSeq
-  }
-
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQ = false
-    for (c <- s) {
-      if (c == '\'') { inQ = !inQ; cur += c }
-      else if (inQ) cur += c
-      else if (c == '(') { depth += 1; cur += c }
-      else if (c == ')') { depth -= 1; cur += c }
-      else if (c == sep && depth == 0) { out += cur.toString; cur.clear() }
-      else cur += c
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.result()
   }
 
   // ------------------------------------------------------------- run

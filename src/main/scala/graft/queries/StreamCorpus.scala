@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructField
 
-import graft.ddl.Ddl
+import graft.ddl.{Ddl, Dialect}
 import graft.types.SqlTypes
 import graft.zset.ZSets
 
@@ -119,26 +119,6 @@ object StreamCorpus {
 
   // ----------------------------------------------------------- run
 
-  /** Split `(a, b), (c, d)` on top-level commas (quote/paren-aware). */
-  private def splitTuples(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQ = false
-    for (c <- s) {
-      if (inQ) { if (c == '\'') inQ = false; cur += c }
-      else c match {
-        case '\'' => inQ = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case ch => cur += ch
-      }
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.result()
-  }
-
   private val insRe = ("""(?is)^\s*INSERT\s+INTO\s+([A-Za-z_]\w*)""" +
     """\s*(?:\(([^)]*)\))?\s*VALUES\s*(.*)$""").r
   private val remRe = ("""(?is)^\s*REMOVE\s+FROM\s+([A-Za-z_]\w*)""" +
@@ -173,7 +153,8 @@ object StreamCorpus {
         s"SELECT * FROM (VALUES $tuples)", adHoc = true))
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          val rows = splitTuples(tuples).map(t => s"SELECT ${t.trim
+          val rows = Dialect.splitTopLevel(tuples).filter(_.trim.nonEmpty)
+            .map(t => s"SELECT ${t.trim
             .stripPrefix("(").stripSuffix(")")}")
           spark.sql(graft.ddl.Dialect.normalize(
             rows.mkString(" UNION ALL "), adHoc = true))

@@ -111,7 +111,7 @@ final class Pipeline(spark: SparkSession,
     * survive untouched — a blind whole-fragment regex corrupted both.
     */
   private def resolveTypeAliases(s: String): String =
-    substOutsideQuotes(s, run =>
+    graft.ddl.Dialect.mapOutsideQuotes(s)(run =>
       graft.ddl.Dialect.mapBareTypes(
         program.types.foldLeft(run) { case (acc, t) =>
           acc.replaceAll("(?i)\\b" +
@@ -174,55 +174,12 @@ final class Pipeline(spark: SparkSession,
     */
   private def resolveParamTypes(params: String): String = {
     if (params.trim.isEmpty) return params
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var start = 0
-    var inQ = false
-    for (i <- params.indices) params(i) match {
-      case '\'' => inQ = !inQ
-      case '(' if !inQ => depth += 1
-      case ')' if !inQ => depth -= 1
-      case ',' if !inQ && depth == 0 =>
-        parts += params.substring(start, i); start = i + 1
-      case _ => ()
-    }
-    parts += params.substring(start)
-    parts.map { p =>
+    graft.ddl.Dialect.splitTopLevel(params).map { p =>
       val t = p.trim
       val sp = t.indexWhere(_.isWhitespace)
       if (sp < 0) t
       else t.take(sp) + " " + resolveTypeAliases(t.drop(sp + 1).trim)
     }.mkString(", ")
-  }
-
-  /** Apply `f` to the unquoted runs of `s`, copying single-quoted SQL
-    * string literals (with `''` escapes) through verbatim.
-    */
-  private def substOutsideQuotes(s: String, f: String => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var start = 0
-    while (i < s.length) {
-      if (s(i) == '\'' || s(i) == '`') {
-        // copy the quoted span (literal or backticked identifier —
-        // a name like `VARCHAR` must never hit the type maps) verbatim
-        val q = s(i)
-        sb.append(f(s.substring(start, i)))
-        var k = i + 1
-        var open = true
-        while (open && k < s.length) {
-          if (s(k) == q) {
-            if (k + 1 < s.length && s(k + 1) == q) k += 2
-            else { open = false; k += 1 }
-          } else k += 1
-        }
-        sb.append(s.substring(i, k))
-        i = k
-        start = k
-      } else i += 1
-    }
-    sb.append(f(s.substring(start)))
-    sb.toString
   }
 
   program.functions.foreach { f =>
@@ -235,7 +192,7 @@ final class Pipeline(spark: SparkSession,
           // Spark spellings, same as view bodies (types.md: the
           // reference's VARCHAR is unlimited)
           s"RETURN ${graft.ddl.Dialect.rewriteSubscript(
-            substOutsideQuotes(resolveBodyTypeCasts(b),
+            graft.ddl.Dialect.mapOutsideQuotes(resolveBodyTypeCasts(b))(
               graft.ddl.Dialect.mapBareTypes))}")
       case None => require(spark.catalog.functionExists(f.name),
         s"external-body function '${f.name}' is not registered")
@@ -2802,8 +2759,10 @@ final class Pipeline(spark: SparkSession,
           s"ad-hoc EXECUTE $ename does not name the prepared statement " +
             s"$pname (names do not persist across requests; PREPARE and " +
             "its EXECUTE must arrive in the same request)")
-        one(Pipeline.bindParams(
-          body, Pipeline.splitArgs(Option(argList).getOrElse(""))))
+        one(Pipeline.bindParams(body,
+          Option(argList).filter(_.trim.nonEmpty)
+            .fold(IndexedSeq.empty[String])(a =>
+              graft.ddl.Dialect.splitTopLevel(a).map(_.trim))))
       case _ => graft.ddl.Ddl.statements(sql) match {
         case Seq() => sys.error("empty ad-hoc request")
         case Seq(single) => one(single)
@@ -2918,57 +2877,20 @@ object Pipeline {
     ("(?is)^\\s*PREPARE\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+(.*?)\\s*;" +
       "\\s*EXECUTE\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*(?:\\((.*)\\))?\\s*;?\\s*$").r
 
-  /** Split an EXECUTE argument list on top-level commas. Tracks
-    * single-quote spans (with `''` escapes) and paren depth so literals
-    * like `'a,b'` or `ARRAY(1,2)` survive intact.
-    */
-  private[runtime] def splitArgs(s: String): IndexedSeq[String] = {
-    if (s.trim.isEmpty) return Vector.empty
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        cur.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            cur.append('\''); i += 1
-          } else inQuote = false
-        }
-      } else c match {
-        case '\'' => inQuote = true; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.result().trim; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.result().trim
-    out.result()
-  }
-
   /** Substitute `$k` positional parameters with the EXECUTE literals.
-    * Only text OUTSIDE single-quoted spans is rewritten (a `$1` inside a
-    * string literal is data, not a parameter — the binding contract real
+    * Only text OUTSIDE quoted spans is rewritten (a `$1` inside a string
+    * literal is data, not a parameter — the binding contract real
     * prepared statements honor). Fails fast on an index past the supplied
     * argument list.
     */
   private[runtime] def bindParams(sql: String, args: IndexedSeq[String]): String = {
     val out = new StringBuilder
-    var inQuote = false
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inQuote) {
-        out.append(c)
-        if (c == '\'') inQuote = false
-        i += 1
-      } else if (c == '\'') {
-        inQuote = true; out.append(c); i += 1
+      val e = graft.ddl.Dialect.quotedEnd(sql, i)
+      if (e > i) {
+        out.append(sql.substring(i, e)); i = e
       } else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
         var j = i + 1
         while (j < sql.length && sql.charAt(j).isDigit) j += 1
@@ -2988,34 +2910,6 @@ object Pipeline {
   private val ReplaceStarRe =
     """(?is)^(\s*SELECT\s+)((?:\w+\.)?\*)\s+REPLACE\s*\(""".r
 
-  /** Index of the LAST top-level `AS` keyword (outside quotes/parens)
-    * in a REPLACE item `expr AS column`, or -1.
-    */
-  private def lastTopLevelAs(s: String): Int = {
-    var last = -1
-    var depth = 0
-    var inQ = false
-    var i = 0
-    def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else c match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'A' | 'a' if depth == 0 && i + 1 < s.length &&
-            (s.charAt(i + 1) == 'S' || s.charAt(i + 1) == 's') &&
-            (i == 0 || !wordChar(s.charAt(i - 1))) &&
-            (i + 2 >= s.length || !wordChar(s.charAt(i + 2))) =>
-          last = i
-        case _ => ()
-      }
-      i += 1
-    }
-    last
-  }
-
   /** `SELECT [t.]* REPLACE (expr AS col, …) FROM …` (grammar.md:407-408):
     * Spark has no REPLACE star modifier, so the star is expanded to the
     * explicit column list with the replaced positions swapped IN PLACE —
@@ -3033,26 +2927,13 @@ object Pipeline {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        var i = open
-        var depth = 0
-        var inQ = false
-        var close = -1
-        while (close < 0 && i < sql.length) {
-          val ch = sql.charAt(i)
-          if (inQ) { if (ch == '\'') inQ = false }
-          else ch match {
-            case '\'' => inQ = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ => ()
-          }
-          i += 1
-        }
+        val close = graft.ddl.Dialect.balancedClose(sql, open)
         require(close > 0, s"unbalanced REPLACE clause in: $sql")
         val rest = sql.substring(close + 1)
         val schema = spark.sql(m.group(1) + m.group(2) + rest).schema
-        val byName = splitArgs(sql.substring(open + 1, close)).map { item =>
-          val as = lastTopLevelAs(item)
+        val byName = graft.ddl.Dialect.splitTopLevel(
+            sql.substring(open + 1, close)).map(_.trim).map { item =>
+          val as = graft.ddl.Dialect.lastTopLevelAsIdx(item)
           require(as > 0,
             s"REPLACE item must be 'expression AS column': $item")
           val colName = item.substring(as + 2).trim

@@ -85,7 +85,7 @@ object SqlTypes {
         // ROW(a INT, b VARCHAR NULL) — a per-field nullability marker
         // is accepted and dropped (struct fields are nullable here)
         val body = row.substring(4, row.length - 1)
-        val fields = splitTopLevel(body).map { f0 =>
+        val fields = graft.ddl.Ddl.splitTop(body, ',').map { f0 =>
           val f = f0.trim.replaceAll("(?i)\\s+NOT\\s+NULL$", "")
             .replaceAll("(?i)\\s+NULL$", "")
           val sp = f.indexOf(' ')
@@ -96,21 +96,6 @@ object SqlTypes {
         StructType(fields)
       case other => throw new IllegalArgumentException(s"unknown type: $other")
     }
-  }
-
-  /** Split on top-level commas (paren/angle-bracket aware). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    for (c <- s) c match {
-      case '(' | '<' => depth += 1; cur += c
-      case ')' | '>' => depth -= 1; cur += c
-      case ',' if depth == 0 => out += cur.toString; cur.clear()
-      case ch => cur += ch
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString
-    out.result()
   }
 
   /** CHAR(n) store semantics: pad-or-truncate to exactly n. */

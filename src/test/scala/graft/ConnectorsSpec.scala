@@ -78,6 +78,12 @@ class ConnectorsSpec extends SparkSpec {
       .select("id", "src", "score")
       .as[(Long, Option[String], Option[Double])].head()
     assert(noMeta === ((9L, None, Some(1.5))))
+    // a paren or comma inside a DEFAULT literal is not a column boundary
+    val quoted = graft.ddl.Ddl.parse(
+      "CREATE TABLE d (a VARCHAR DEFAULT 'x(y', b INT, " +
+        "c VARCHAR DEFAULT 'p,q');").tables.head.columns
+    assert(quoted.map(_.name) === Seq("a", "b", "c"))
+    assert(quoted.map(_.default) === Seq(Some("'x(y'"), None, Some("'p,q'")))
   }
 
   test("soft_delete turns deletions into flagged insertions") {

@@ -375,6 +375,15 @@ class DialectSpec extends SparkSpec {
     assert(Dialect.normalize(
       "SELECT 'QUALIFY DISTINCT ON (x) LIMIT 1, 2 FETCH FIRST' FROM t")
       === "SELECT 'QUALIFY DISTINCT ON (x) LIMIT 1, 2 FETCH FIRST' FROM t")
+    // one literal carrying the trigger of every paren/bracket rewrite
+    val triggers = "SELECT 'SUBSTRING(x FROM 1 FOR 2) EXTRACT(DOW FROM d) " +
+      "ARRAY[1] MAP[1, 2] xs[1] TRUNCATE(x) DATE_PART(x) FLOOR(d TO DAY) " +
+      "DATE_TRUNC(x) CAST(x AS CHAR(2)) CAST(x AS BINARY(2)) GROUPING(a) " +
+      "GROUPING_ID(a, b) GROUP BY a LOG(x) ARRAY_AGG(x ORDER BY y) PIVOT ( " +
+      "UNPIVOT ( UNNEST( TUMBLE( TABLE(TUMBLE( OUTER APPLY ( ASOF JOIN " +
+      "LATERAL (VALUES (1)) CASE (a, b) WHEN (1, 2) (a, b) IN ((1, 2)) " +
+      "(d - e) HOURS (a, b) OVERLAPS (c, d)' FROM t"
+    assert(Dialect.normalize(triggers) === triggers)
     // REPLACE-like and EXCLUDE-like spellings inside literals survive
     assert(Dialect.normalize("SELECT '* EXCLUDE (a) ROW(' FROM t")
       === "SELECT '* EXCLUDE (a) ROW(' FROM t")
@@ -760,6 +769,14 @@ class DialectSpec extends SparkSpec {
     // treat backticked spans like literals)
     assert(Dialect.normalize("SELECT a AS \"VARCHAR\", b AS \"qualify\"" +
       " FROM t") === "SELECT a AS `VARCHAR`, b AS `qualify` FROM t")
+    // ... and so must a quoted identifier holding a bracket, inside or
+    // outside the brackets of an ARRAY[...] constructor or a subscript
+    assert(Dialect.normalize("SELECT \"ARRAY[1]\" FROM t")
+      === "SELECT `ARRAY[1]` FROM t")
+    assert(Dialect.normalize("SELECT ARRAY[\"c]\", 2] FROM t")
+      === "SELECT array(`c]`, 2) FROM t")
+    assert(Dialect.normalize("SELECT xs[\"i]\"] FROM t")
+      === "SELECT graft_subscript(xs, `i]`) FROM t")
     // e2e: quoted column in the DDL, quoted references in the view
     val pipe = Pipeline(spark,
       "CREATE TABLE t (\"Order Id\" BIGINT, v BIGINT);\n" +
